@@ -1,25 +1,33 @@
-"""Graph analytics on Spark DataFrames: exact-arithmetic PageRank.
+"""Graph kernels on Spark DataFrames, and the registry entries over them.
+
+Every graph algorithm lives here exactly once, as a kernel over a
+NUMERIC edge frame: PageRank (plain, converged, personalized), BFS,
+label propagation, k-core peeling, triangles, clustering,
+assortativity and modularity. Each ``@query`` entry prepares its input
+frame (the purchase graph from ``_edges``, the part co-occurrence graph
+from ``part_edges``), calls the kernel, and renames or displays the
+output; the ``Graph`` facade (operators/graph_api.py) calls the same
+kernels. Connected components live in graph_api
+(``star_connected_components``, ``connected_components_labels``).
 
 Iterative graph algorithms are where float nondeterminism usually
 kills cross-engine verification (per-node contribution sums arrive in
-shuffle order). This PageRank works entirely in BIGINT fixed-point
+shuffle order). PageRank here works entirely in BIGINT fixed-point
 (1e9 units): contributions are ``floor(rank/outdeg)``, damping is
 ``floor(85*x/100)`` — integer sums are order-insensitive, so three
 unrolled iterations are verified bit-exactly against a DuckDB oracle.
-Production would loop to convergence like dedup_connected_components;
-the per-iteration plan (one shuffle: contributions grouped by dst) is
-identical.
 
-Graph: customer → supplier "bought from" edges derived from
-orders ⨝ lineitem (distinct pairs). Nodes are tagged c/s to keep the
-two key spaces disjoint.
+Purchase graph: customer → supplier "bought from" edges derived from
+orders ⨝ lineitem (distinct pairs). Node ids are custkey*2 (even) and
+suppkey*2+1 (odd); ``display_name`` turns them into 'c…'/'s…' names.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from minispark_spark.functions.pairs import sorted_pair_structs
 from minispark_spark.registry import query
 from minispark_spark.sources.tables import load_table
 
@@ -34,7 +42,7 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct customer→supplier edges with NUMERIC node ids: custkey*2
     (even) / suppkey*2+1 (odd). Long keys keep the distinct shuffle and
     every per-iteration join on 8-byte keys; the 'c…'/'s…' display names
-    are reconstructed only in the final projection (graph_pagerank).
+    are reconstructed only in the final projection (display_name).
 
     CACHED per (session, sf_dir) and shared across the graph family —
     pagerank, triangles, and BFS all start from this frame, so the
@@ -58,41 +66,65 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
+def display_name(col: str) -> Column:
+    """Numeric purchase-graph node id -> 'c<custkey>' / 's<suppkey>'."""
+    return F.concat(
+        F.when(F.col(col) % 2 == 0, F.lit("c")).otherwise(F.lit("s")),
+        F.shiftright(F.col(col), 1).cast("string"),
+    )
+
+
+def symmetric_edges(e: DataFrame) -> DataFrame:
+    """Both orientations of a ``(src, dst)`` edge frame, cached
+    PARTITIONED BY DST (round 8): the per-round aggregates of BFS, label
+    propagation and the min-label fixpoint all key on dst, so with the
+    node-sized state broadcast each round plans with ZERO exchanges —
+    the edge-sized shuffle is paid once at cache build instead of once
+    per round (guide §2.4: two operations keyed the same way share one
+    exchange)."""
+    return _both_ways(e).repartition("dst").cache()
+
+
+def _both_ways(e: DataFrame) -> DataFrame:
+    return e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+
+
 # Broadcast the rank vector when nodes * ~24 B/row stays well under the
 # executor memory a broadcast may use. Above that, fall back to shuffle
 # joins (a billion-node graph co-partitions edges and ranks instead).
 BROADCAST_MAX_NODES = 10_000_000
 
 
-def pagerank_fixed(edges: DataFrame, n_iter: int = N_ITER) -> DataFrame:
-    """n_iter rounds of integer PageRank over a directed edge list."""
-    # Cache the static graph structure once: edges fused with outdegree
-    # (it never changes between iterations), plus the node set. Each
-    # iteration then only joins the current ranks and aggregates.
-    edges = edges.cache()
-    nodes = (
+def _broadcast_hint(n_nodes: int):
+    return F.broadcast if n_nodes <= BROADCAST_MAX_NODES else (lambda df: df)
+
+
+def _node_set(edges: DataFrame) -> DataFrame:
+    """Distinct endpoints of a directed edge frame, cached."""
+    return (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
         .distinct()
         .cache()
     )
-    n_nodes = nodes.count()
-    if n_nodes == 0:  # empty graph: no ranks, not a ZeroDivisionError
-        return nodes.select("node", F.lit(0).cast("long").alias("rank"))
-    init = SCALE // n_nodes
-    base = (15 * SCALE // 100) // n_nodes
+
+
+def _rank_wedges(edges: DataFrame, nodes: DataFrame) -> DataFrame:
+    """The static structure of every PageRank loop, built and
+    materialized once: each edge fused with its source's outdegree (it
+    never changes between iterations), cached PARTITIONED BY DST."""
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    # Cache the fused edges PARTITIONED BY DST: the per-iteration
-    # contribution groupBy (keyed on dst) is then partition-local —
-    # with the rank vector broadcast, an iteration runs with ZERO
-    # shuffles (Spark's alias-aware partitioning carries dst→node
-    # through the projection into the aggregate). A zero-contribution
-    # self row per node (real=false) makes the aggregate cover EVERY
-    # node — in_sum gains an exact +0 and nodes with no in-edges get
-    # in_sum=0 (identical to the old coalesce(NULL, 0)) — so each
-    # iteration needs no nodes-frame join at all: the new rank is a
-    # projection of the partition-local aggregate (round 8; one stage
-    # and one broadcast build per iteration instead of two of each).
+    # Partitioned by dst, the per-iteration contribution groupBy (keyed
+    # on dst) is partition-local — with the rank vector broadcast, an
+    # iteration runs with ZERO shuffles (Spark's alias-aware
+    # partitioning carries dst→node through the projection into the
+    # aggregate). A zero-contribution self row per node (real=false)
+    # makes the aggregate cover EVERY node — in_sum gains an exact +0
+    # and nodes with no in-edges get in_sum=0 (identical to the old
+    # coalesce(NULL, 0)) — so each iteration needs no nodes-frame join
+    # at all: the new rank is a projection of the partition-local
+    # aggregate (round 8; one stage and one broadcast build per
+    # iteration instead of two of each).
     wedges = (
         edges.join(outdeg, "src")
         .withColumn("real", F.lit(True))
@@ -108,29 +140,35 @@ def pagerank_fixed(edges: DataFrame, n_iter: int = N_ITER) -> DataFrame:
         .cache()
     )
     wedges.count()
+    return wedges
 
+
+def _in_sums(wedges: DataFrame, ranks: DataFrame, hint) -> DataFrame:
+    """One round's ``(node, in_sum)``: integer contributions
+    floor(rank/outdeg) summed per destination, for every node."""
     # The rank vector is |nodes| rows vs |edges| rows of graph structure.
     # Broadcasting it makes each iteration's rank join a map-side hash
-    # join over the CACHED edges — no edge bytes ever reshuffle; the only
-    # per-iteration shuffle is the partial-aggregated contribution sum.
-    hint = F.broadcast if n_nodes <= BROADCAST_MAX_NODES else (lambda df: df)
-
+    # join over the CACHED edges — no edge bytes ever reshuffle.
     c = F.when(
         F.col("real"), (F.col("rank") / F.col("outdeg")).cast("long")
     ).otherwise(F.lit(0).cast("long"))
-    ranks = nodes.select("node", F.lit(init).cast("long").alias("rank"))
+    return (
+        wedges.join(hint(ranks), F.col("src") == F.col("node"))
+        .select(F.col("dst").alias("node"), c.alias("c"))
+        .groupBy("node")
+        .agg(F.sum("c").alias("in_sum"))
+    )
+
+
+def _pagerank_rounds(
+    wedges: DataFrame, ranks: DataFrame, teleport: Column, n_iter: int, hint
+) -> DataFrame:
+    """n_iter damping-0.85 rounds: rank = teleport + floor(85*in_sum/100)."""
     for _ in range(n_iter):
-        contrib = (
-            wedges.join(hint(ranks), F.col("src") == F.col("node"))
-            .select(F.col("dst").alias("node"), c.alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("in_sum"))
-        )
-        ranks = contrib.select(
+        ranks = _in_sums(wedges, ranks, hint).select(
             "node",
             (
-                F.lit(base)
-                + (F.lit(85) * F.col("in_sum") / F.lit(100)).cast("long")
+                teleport + (F.lit(85) * F.col("in_sum") / F.lit(100)).cast("long")
             ).alias("rank"),
         ).localCheckpoint(eager=False)  # truncate lineage: a lazy rank
         # chain re-executes ALL prior iterations inside each broadcast.
@@ -140,6 +178,20 @@ def pagerank_fixed(edges: DataFrame, n_iter: int = N_ITER) -> DataFrame:
         # halves the action count of the loop (guide §1.2: per-round
         # fixed job latency dominates these node-sized iterations).
     return ranks
+
+
+def pagerank_fixed(edges: DataFrame, n_iter: int = N_ITER) -> DataFrame:
+    """n_iter rounds of integer PageRank over a directed edge list."""
+    edges = edges.cache()
+    nodes = _node_set(edges)
+    n_nodes = nodes.count()
+    if n_nodes == 0:  # empty graph: no ranks, not a ZeroDivisionError
+        return nodes.select("node", F.lit(0).cast("long").alias("rank"))
+    init = SCALE // n_nodes
+    base = (15 * SCALE // 100) // n_nodes
+    wedges = _rank_wedges(edges, nodes)
+    ranks = nodes.select("node", F.lit(init).cast("long").alias("rank"))
+    return _pagerank_rounds(wedges, ranks, F.lit(base), n_iter, _broadcast_hint(n_nodes))
 
 
 def _iter_sql(prev: str, i: int) -> str:
@@ -193,11 +245,7 @@ _PR_ITERS = ",".join(_iter_sql(f"r{i}", i + 1) for i in range(N_ITER))
 )
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks = pagerank_fixed(_edges(spark, sf_dir))
-    name = F.concat(
-        F.when(F.col("node") % 2 == 0, F.lit("c")).otherwise(F.lit("s")),
-        F.shiftright(F.col("node"), 1).cast("string"),
-    )
-    return ranks.select(name.alias("node"), "rank")
+    return ranks.select(display_name("node").alias("node"), "rank")
 
 
 # ---------------------------------------------------------------------------
@@ -259,6 +307,10 @@ def _chain_edges(spark: SparkSession) -> DataFrame:
     )
 
 
+_EDGES_SQL = (  # the oracle's spelling of _edges
+    "SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst "
+    "FROM orders JOIN lineitem ON o_orderkey = l_orderkey"
+)
 _CHAIN_SQL = f"""
             SELECT -i AS src, -(i + 1) AS dst FROM range(1, {CHAIN_LEN}) t(i)
 """
@@ -267,10 +319,7 @@ _CHAIN_SQL = f"""
 @query(
     "graph_pagerank_converged",
     oracle=f"""
-        WITH pedges AS (
-            SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-            FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        ),
+        WITH pedges AS ({_EDGES_SQL}),
         edges AS (
             SELECT src, dst FROM pedges
             UNION ALL
@@ -315,12 +364,7 @@ _CHAIN_SQL = f"""
 )
 def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _edges(spark, sf_dir).unionByName(_chain_edges(spark)).cache()
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .cache()
-    )
+    nodes = _node_set(edges)
     n_nodes = nodes.count()
     n_edges = edges.count()
     scale_n = _pr_conv_scale(n_nodes)  # constant per-node resolution
@@ -334,47 +378,17 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     tol = PR_CONV_TOL
     base = ((100 - PR_CONV_DAMP) * scale_n // 100) // n_nodes
     init = scale_n // n_nodes
-    outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     # dangling = nodes with no out-edge = n_nodes minus the distinct-src
-    # count, which IS the outdeg frame's cardinality — one aggregate
-    # count instead of the old nodes-vs-distinct-src anti-join (round 8;
-    # same integer by definition).
-    n_dangling = n_nodes - outdeg.count()
-    # Zero-contribution self rows (real=false) make the per-round
-    # aggregate cover EVERY node, exactly as in pagerank_fixed: no
-    # per-round nodes join, no broadcast build of the contribution
-    # frame — each round is one partition-local pass over the cached
-    # dst-partitioned wedges plus the (node-sized) old-rank broadcast.
-    wedges = (
-        edges.join(outdeg, "src")
-        .withColumn("real", F.lit(True))
-        .unionByName(
-            nodes.select(
-                F.col("node").alias("src"),
-                F.col("node").alias("dst"),
-                F.lit(1).alias("outdeg"),
-                F.lit(False).alias("real"),
-            )
-        )
-        .repartition("dst")
-        .cache()
-    )
-    wedges.count()
-    hint = F.broadcast if n_nodes <= BROADCAST_MAX_NODES else (lambda df: df)
-
-    c = F.when(
-        F.col("real"), (F.col("rank") / F.col("outdeg")).cast("long")
-    ).otherwise(F.lit(0).cast("long"))
+    # count — one aggregate count instead of the old nodes-vs-distinct-
+    # src anti-join (round 8; same integer by definition).
+    n_dangling = n_nodes - edges.select("src").distinct().count()
+    wedges = _rank_wedges(edges, nodes)
+    hint = _broadcast_hint(n_nodes)
     ranks = nodes.select("node", F.lit(init).cast("long").alias("rank"))
     iters = 0
     delta = None
     while iters < PR_CONV_MAX_ITERS:
-        contrib = (
-            wedges.join(hint(ranks), F.col("src") == F.col("node"))
-            .select(F.col("dst").alias("node"), c.alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("in_sum"))
-        )
+        contrib = _in_sums(wedges, ranks, hint)
         # Carry the previous rank INTO the checkpointed frame (one
         # extra broadcast-join of the node-sized old vector) so the
         # delta aggregate below is a bare scan of the checkpoint — no
@@ -450,13 +464,7 @@ def _cc_level_sql(prev: str, nxt: str) -> str:
         )"""
 
 
-@query(
-    "graph_components_converged",
-    oracle=f"""
-        WITH pedges AS (
-            SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-            FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        ),
+_CC_ORACLE_CTES = f"""WITH pedges AS ({_EDGES_SQL}),
         alledges AS (
             SELECT src, dst FROM pedges
             UNION ALL
@@ -468,7 +476,13 @@ def _cc_level_sql(prev: str, nxt: str) -> str:
             SELECT dst AS src, src AS dst FROM alledges
         ),
         c0 AS (SELECT DISTINCT src AS node, src AS lab FROM sym),
-        {",".join(_cc_level_sql(f"c{i}", f"c{i + 1}") for i in range(CC_ORACLE_LEVELS))}
+        {",".join(_cc_level_sql(f"c{i}", f"c{i + 1}") for i in range(CC_ORACLE_LEVELS))}"""
+
+
+@query(
+    "graph_components_converged",
+    oracle=f"""
+        {_CC_ORACLE_CTES}
         SELECT node, lab AS component, TRUE AS converged_beyond_unroll
         FROM c{CC_ORACLE_LEVELS}
     """,
@@ -492,25 +506,18 @@ def _cc_level_sql(prev: str, nxt: str) -> str:
     "map-side-combined min-aggregate; convergence is detected from a "
     "1-row SUM(label) aggregate (labels are monotone non-increasing, "
     "so an unchanged sum <=> zero changes — no compare join). "
-    "O(diameter) rounds; the pointer-doubling variant in graph_api "
-    "covers the long-diameter regime.",
+    "O(diameter) rounds; the large-star/small-star contraction "
+    "(graph_components_star, graph_api.star_connected_components) "
+    "covers the long-diameter regime in O(log n) rounds.",
 )
 def graph_components_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _edges(spark, sf_dir).unionByName(_chain_edges(spark))
-    # Cache the symmetric edges PARTITIONED BY DST (the pagerank wedges
-    # trick, round 8): each round's min-label aggregate keys on dst, so
-    # with the labels broadcast the whole round plans with ZERO
-    # exchanges — the old spelling (union labels into the groupBy)
-    # reshuffled an edge-sized frame every round (guide §2.4: two
-    # operations keyed the same way share one exchange — paid once at
-    # cache build instead of once per round).
-    sym = (
-        e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .repartition("dst")
-        .cache()
-    )
+    # dst-partitioned symmetric edges: each round's min-label aggregate
+    # keys on dst, so with the labels broadcast the whole round plans
+    # with ZERO exchanges — the old spelling (union labels into the
+    # groupBy) reshuffled an edge-sized frame every round.
+    sym = symmetric_edges(_edges(spark, sf_dir).unionByName(_chain_edges(spark)))
     n_nodes_est = sym.count()  # materializes the cache; broadcast regime
-    hint = F.broadcast if n_nodes_est <= BROADCAST_MAX_NODES else (lambda df: df)
+    hint = _broadcast_hint(n_nodes_est)
     # In the symmetric graph every node has an in-edge, so the per-round
     # aggregate over dst covers EVERY node — seed labels are simply the
     # distinct dst set (identity labels), co-partitioned with sym.
@@ -527,9 +534,7 @@ def graph_components_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     # but the cap turns a pathological regenerated gate graph (huge
     # diameter) into a loud red row instead of an unbounded gate loop —
     # same discipline as KCORE_CONV_MAX_ROUNDS / CC_STAR_MAX_ROUNDS.
-    import minispark_spark.operators.graph as _g
-
-    while rounds < _g.CC_CONV_MAX_ROUNDS:
+    while rounds < CC_CONV_MAX_ROUNDS:
         # min over in-neighbors, partition-local on the dst-partitioned
         # cache; then fold in the node's own previous label with a
         # broadcast join + least() — identical integers to the old
@@ -557,7 +562,7 @@ def graph_components_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
         prev_sum = cur_sum
     else:
         raise RuntimeError(
-            f"components_converged: no fixpoint after {_g.CC_CONV_MAX_ROUNDS} rounds"
+            f"components_converged: no fixpoint after {CC_CONV_MAX_ROUNDS} rounds"
         )
     return labels.select(
         "node",
@@ -574,22 +579,7 @@ STAR_LOG_BOUND = 8  # ceil(log2) bound with slack for the gate graph:
 @query(
     "graph_components_star",
     oracle=f"""
-        WITH pedges AS (
-            SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-            FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        ),
-        alledges AS (
-            SELECT src, dst FROM pedges
-            UNION ALL
-            {_CHAIN_SQL}
-        ),
-        sym AS MATERIALIZED (
-            SELECT src, dst FROM alledges
-            UNION ALL
-            SELECT dst AS src, src AS dst FROM alledges
-        ),
-        c0 AS (SELECT DISTINCT src AS node, src AS lab FROM sym),
-        {",".join(_cc_level_sql(f"c{i}", f"c{i + 1}") for i in range(CC_ORACLE_LEVELS))}
+        {_CC_ORACLE_CTES}
         SELECT node, lab AS component, TRUE AS log_rounds_ok
         FROM c{CC_ORACLE_LEVELS}
     """,
@@ -626,15 +616,91 @@ def graph_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 TRIANGLE_MIN_SUPPORT = 2
 
 
-@query(
-    "graph_triangle_count",
-    oracle=f"""
-        WITH lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        e AS (
+def part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Part co-occurrence edges ``(u, v)``, u < v: part pairs sharing
+    >= TRIANGLE_MIN_SUPPORT orders. One shuffle groups each order's
+    parts into a sorted basket, the i<j pairs expand JVM-side
+    (functions/pairs.py), a second shuffle counts support. Not cached:
+    each caller makes its own cache decision."""
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    baskets = li.groupBy("l_orderkey").agg(
+        F.array_sort(F.collect_set("l_partkey")).alias("parts")
+    )
+    return (
+        baskets.select(F.explode(sorted_pair_structs("parts", "u", "v")).alias("p"))
+        .groupBy("p.u", "p.v")
+        .agg(F.count(F.lit(1)).alias("w"))
+        .filter(F.col("w") >= TRIANGLE_MIN_SUPPORT)
+        .select("u", "v")
+    )
+
+
+def _part_edges_sql(name: str = "e") -> str:
+    """The oracle's spelling of part_edges: CTEs ``lp`` and ``name(u, v)``."""
+    return f"""lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
+        {name} AS (
             SELECT a.p AS u, b.p AS v
             FROM lp a JOIN lp b ON a.o = b.o AND a.p < b.p
             GROUP BY 1, 2 HAVING COUNT(*) >= {TRIANGLE_MIN_SUPPORT}
+        )"""
+
+
+def canonical_edges(edges: DataFrame) -> DataFrame:
+    """The undirected view of a ``(src, dst)`` frame as canonical
+    ``(u, v)`` edges: u < v, distinct, self loops dropped."""
+    return (
+        edges.select(F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v"))
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+    )
+
+
+def _endpoint_degrees(e: DataFrame) -> DataFrame:
+    """``(node, d)``: undirected degree over canonical ``(u, v)`` edges."""
+    return (
+        e.select(F.col("u").alias("node"))
+        .unionByName(e.select(F.col("v").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+
+
+def triangles(e: DataFrame) -> DataFrame:
+    """``(node_a, node_b, node_c)``, a < b < c, once per triangle of a
+    canonical (u < v, distinct) edge frame: two self-joins on the
+    vertex-ordered edges. ``e`` is scanned three times — cache it."""
+    e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
+    return (
+        e1.join(e2, F.col("e2.u") == F.col("e1.v"))
+        .join(
+            e3,
+            (F.col("e3.u") == F.col("e1.u")) & (F.col("e3.v") == F.col("e2.v")),
+            "left_semi",
         )
+        .select(
+            F.col("e1.u").alias("node_a"),
+            F.col("e1.v").alias("node_b"),
+            F.col("e2.v").alias("node_c"),
+        )
+    )
+
+
+def triangle_corners(tri: DataFrame) -> DataFrame:
+    """``(node, t)``: triangles per vertex — each triangle credits its
+    three corners once. Vertices in no triangle are absent."""
+    return (
+        tri.select(F.col("node_a").alias("node"))
+        .unionByName(tri.select(F.col("node_b").alias("node")))
+        .unionByName(tri.select(F.col("node_c").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("t"))
+    )
+
+
+@query(
+    "graph_triangle_count",
+    oracle=f"""
+        WITH {_part_edges_sql()}
         SELECT e1.u AS node_a, e1.v AS node_b, e2.v AS node_c
         FROM e e1
         JOIN e e2 ON e2.u = e1.v
@@ -650,42 +716,9 @@ TRIANGLE_MIN_SUPPORT = 2
     "plan shape).",
 )
 def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("parts")
-    )
-    pair = F.explode(
-        F.expr(
-            "flatten(transform(parts, (x, i) -> "
-            "transform(slice(parts, i + 2, size(parts)), y -> "
-            "struct(x AS u, y AS v))))"
-        )
-    )
-    e = (
-        baskets.select(pair.alias("p"))
-        .groupBy("p.u", "p.v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= TRIANGLE_MIN_SUPPORT)
-        .select("u", "v")
-        .cache()
-    )
+    e = part_edges(spark, sf_dir).cache()
     e.count()  # materialize: three concurrent scans below
-    e1 = e.alias("e1")
-    e2 = e.alias("e2")
-    e3 = e.alias("e3")
-    return (
-        e1.join(e2, F.col("e2.u") == F.col("e1.v"))
-        .join(
-            e3,
-            (F.col("e3.u") == F.col("e1.u")) & (F.col("e3.v") == F.col("e2.v")),
-            "left_semi",
-        )
-        .select(
-            F.col("e1.u").alias("node_a"),
-            F.col("e1.v").alias("node_b"),
-            F.col("e2.v").alias("node_c"),
-        )
-    )
+    return triangles(e)
 
 
 BFS_SOURCE = 2  # customer 1 (custkey*2)
@@ -708,10 +741,7 @@ def _bfs_iter_sql(prev: str, nxt: str) -> str:
 @query(
     "graph_bfs_hops",
     oracle=f"""
-        WITH edges AS (
-            SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-            FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        ),
+        WITH edges AS ({_EDGES_SQL}),
         sym AS (
             SELECT src, dst FROM edges
             UNION ALL
@@ -735,22 +765,25 @@ def _bfs_iter_sql(prev: str, nxt: str) -> str:
     "level-unrolled oracle replays the distributed algorithm instead).",
 )
 def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _edges(spark, sf_dir)
-    # dst-partitioned like the other round-8 loops: the per-level
-    # frontier aggregate keys on dst, so pre-aggregating nxt is
-    # partition-local — the union's min-fold then shuffles two
-    # NODE-sized frames instead of an edge-sized one per level.
-    sym = (
-        e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .repartition("dst")
-        .cache()
+    reached = bfs(symmetric_edges(_edges(spark, sf_dir)), BFS_SOURCE, BFS_HOPS)
+    return reached.select(
+        display_name("node").alias("node"), F.col("h").cast("int").alias("hops")
     )
-    sym.count()  # materialize once; all BFS_HOPS levels scan it
-    reached = (
-        sym.sparkSession.range(1)
-        .select(F.lit(BFS_SOURCE).cast("long").alias("node"), F.lit(0).alias("h"))
+
+
+def bfs(sym: DataFrame, source, hops: int = BFS_HOPS) -> DataFrame:
+    """``(node, h)``: shortest hop counts from ``source`` over the cached
+    dst-partitioned symmetric edges (:func:`symmetric_edges`), ``hops``
+    min-fold levels. With the frontier aggregate keyed on dst,
+    pre-aggregating each level is partition-local — the union's
+    min-fold then shuffles two NODE-sized frames instead of an
+    edge-sized one per level."""
+    sym.count()  # materialize once; all levels scan it
+    reached = sym.sparkSession.range(1).select(
+        F.lit(source).cast(sym.schema["src"].dataType).alias("node"),
+        F.lit(0).alias("h"),
     )
-    for _ in range(BFS_HOPS):
+    for _ in range(hops):
         # The reached set is bounded by the node count — broadcast it so
         # each level probes the cached edges map-side (zero edge
         # shuffle; pagerank's broadcast-rank-vector pattern, same
@@ -778,11 +811,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         # checkpoint those two consumers race to materialize it and the
         # level computes twice (the LP final-round lesson). One
         # materialization job per level is the floor for this loop.
-    name = F.concat(
-        F.when(F.col("node") % 2 == 0, F.lit("c")).otherwise(F.lit("s")),
-        F.shiftright(F.col("node"), 1).cast("string"),
-    )
-    return reached.select(name.alias("node"), F.col("h").cast("int").alias("hops"))
+    return reached
 
 
 LP_ROUNDS = 3
@@ -826,10 +855,7 @@ def lp_round(sym: DataFrame, labels: DataFrame, broadcast: bool = True) -> DataF
 @query(
     "graph_label_propagation",
     oracle=f"""
-        WITH edges AS (
-            SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-            FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        ),
+        WITH edges AS ({_EDGES_SQL}),
         sym AS (
             SELECT src, dst FROM edges
             UNION ALL
@@ -860,25 +886,24 @@ def lp_round(sym: DataFrame, labels: DataFrame, broadcast: bool = True) -> DataF
     "co-partitioned shuffle join.",
 )
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _edges(spark, sf_dir)
-    # Cache the symmetrized view PARTITIONED BY DST (round 8, the
-    # pagerank-wedges / components_converged trick): both per-round
-    # aggregates key on dst — hash(dst) satisfies the (dst, label)
-    # clustering too — so with the label vector broadcast each LP round
-    # plans with ZERO exchanges; the edge-sized partial-count shuffle
-    # the projection-only spelling paid per round is paid once at cache
-    # build. (Round 7 had measured a plain unpartitioned sym cache as a
-    # LOSS — that one only deduplicated the projection, it removed no
-    # exchange.)
-    sym = (
-        e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .repartition("dst")
-        .cache()
+    labels = label_propagation(symmetric_edges(_edges(spark, sf_dir)))
+    return labels.select(
+        display_name("node").alias("node"), display_name("label").alias("community")
     )
+
+
+def label_propagation(sym: DataFrame, n_rounds: int = LP_ROUNDS) -> DataFrame:
+    """``(node, label)`` after ``n_rounds`` synchronous LP rounds over the
+    cached dst-partitioned symmetric edges (:func:`symmetric_edges`):
+    both per-round aggregates key on dst — hash(dst) satisfies the
+    (dst, label) clustering too — so with the label vector broadcast
+    each round plans with ZERO exchanges. (Round 7 had measured a plain
+    unpartitioned sym cache as a LOSS — that one only deduplicated the
+    projection, it removed no exchange.)"""
     nodes = sym.select(F.col("src").alias("node")).distinct().cache()
     n_nodes = nodes.count()  # materializes; decides the broadcast regime
     labels = nodes.select("node", F.col("node").alias("label"))
-    for i in range(LP_ROUNDS):
+    for i in range(n_rounds):
         labels = lp_round(
             sym, labels, broadcast=n_nodes <= BROADCAST_MAX_NODES
             # Truncate lineage: a lazy label chain re-executes all prior
@@ -890,16 +915,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             # downstream consumers (graph_modularity joins the labels
             # three times) would otherwise race concurrent broadcast
             # builds into duplicate computes of the last round.
-        ).localCheckpoint(eager=(i == LP_ROUNDS - 1))
-    name = F.concat(
-        F.when(F.col("node") % 2 == 0, F.lit("c")).otherwise(F.lit("s")),
-        F.shiftright(F.col("node"), 1).cast("string"),
-    )
-    community = F.concat(
-        F.when(F.col("label") % 2 == 0, F.lit("c")).otherwise(F.lit("s")),
-        F.shiftright(F.col("label"), 1).cast("string"),
-    )
-    return labels.select(name.alias("node"), community.alias("community"))
+        ).localCheckpoint(eager=(i == n_rounds - 1))
+    return labels
 
 
 LINKPRED_DEG_CAP = 40
@@ -909,12 +926,7 @@ LINKPRED_MIN_CN = 2
 @query(
     "graph_link_prediction",
     oracle=f"""
-        WITH lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        e AS (
-            SELECT a.p AS u, b.p AS v
-            FROM lp a JOIN lp b ON a.o = b.o AND a.p < b.p
-            GROUP BY 1, 2 HAVING COUNT(*) >= {TRIANGLE_MIN_SUPPORT}
-        ),
+        WITH {_part_edges_sql()},
         sym AS (SELECT u AS s, v AS n FROM e UNION ALL SELECT v AS s, u AS n FROM e),
         deg AS (SELECT s, COUNT(*) AS d FROM sym GROUP BY 1),
         mid AS (SELECT s FROM deg WHERE d <= {LINKPRED_DEG_CAP}),
@@ -953,20 +965,7 @@ LINKPRED_MIN_CN = 2
     "degree joins — each keyed on part ids, skew-bounded by the cap.",
 )
 def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from minispark_spark.functions.pairs import sorted_pair_structs
-
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("parts")
-    )
-    e = (
-        baskets.select(F.explode(sorted_pair_structs("parts", "u", "v")).alias("p"))
-        .groupBy("p.u", "p.v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= TRIANGLE_MIN_SUPPORT)
-        .select("u", "v")
-        .cache()
-    )
+    e = part_edges(spark, sf_dir).cache()
     e.count()  # materialize: sym is scanned for degrees, middles, and pairs
     return link_prediction_scores(e).select(
         F.col("u").alias("part_a"),
@@ -985,11 +984,7 @@ def link_prediction_scores(
     edge frame; returns ``(u, v, common_neighbors, jaccard_lb)`` for
     non-adjacent pairs. Shared by the registry query and Graph facade —
     see graph_link_prediction's docstring for the hub-cap rationale."""
-    from minispark_spark.functions.pairs import sorted_pair_structs
-
-    sym = e.select(F.col("u").alias("s"), F.col("v").alias("n")).unionAll(
-        e.select(F.col("v").alias("s"), F.col("u").alias("n"))
-    )
+    sym = _sn_edges(e)
     deg = sym.groupBy("s").agg(F.count(F.lit(1)).alias("d"))
     nbrs = sym.groupBy("s").agg(F.array_sort(F.collect_set("n")).alias("ns"))
     cn = (
@@ -1017,6 +1012,13 @@ def link_prediction_scores(
     )
 
 
+def _sn_edges(e: DataFrame) -> DataFrame:
+    """Both orientations ``(s, n)`` of canonical ``(u, v)`` edges."""
+    return e.select(F.col("u").alias("s"), F.col("v").alias("n")).unionAll(
+        e.select(F.col("v").alias("s"), F.col("u").alias("n"))
+    )
+
+
 KCORE_K = 4
 KCORE_ROUNDS = 4
 
@@ -1035,12 +1037,7 @@ def _kcore_iter_sql(prev: str, i: int) -> str:
 @query(
     "graph_kcore",
     oracle=f"""
-        WITH lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        e AS (
-            SELECT a.p AS u, b.p AS v
-            FROM lp a JOIN lp b ON a.o = b.o AND a.p < b.p
-            GROUP BY 1, 2 HAVING COUNT(*) >= {TRIANGLE_MIN_SUPPORT}
-        ),
+        WITH {_part_edges_sql()},
         e0 AS (SELECT u AS s, v AS n FROM e UNION ALL SELECT v AS s, u AS n FROM e),
         {", ".join(_kcore_iter_sql(f"e{i - 1}", i) for i in range(1, KCORE_ROUNDS + 1))}
         SELECT s AS node, CAST(COUNT(*) AS BIGINT) AS degree
@@ -1058,36 +1055,34 @@ def _kcore_iter_sql(prev: str, i: int) -> str:
     "detection at scale.",
 )
 def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from minispark_spark.functions.pairs import sorted_pair_structs
+    return kcore_degrees(kcore(part_edges(spark, sf_dir)))
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("parts")
+
+def kcore_peel(sym: DataFrame, k: int) -> DataFrame:
+    """One peel over ``(s, n)`` rows (both orientations): drop every
+    node of degree < k together with all rows touching it — one degree
+    aggregate plus two semi-join filters, all keyed on the node id."""
+    deg = sym.groupBy("s").agg(F.count(F.lit(1)).alias("d"))
+    keep = deg.filter(F.col("d") >= k).select("s")
+    return sym.join(keep, "s", "left_semi").join(
+        keep.select(F.col("s").alias("n")), "n", "left_semi"
     )
-    e = (
-        baskets.select(F.explode(sorted_pair_structs("parts", "u", "v")).alias("p"))
-        .groupBy("p.u", "p.v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= TRIANGLE_MIN_SUPPORT)
-        .select("u", "v")
-    )
-    sym = e.select(F.col("u").alias("s"), F.col("v").alias("n")).unionAll(
-        e.select(F.col("v").alias("s"), F.col("u").alias("n"))
-    )
+
+
+def kcore(e: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> DataFrame:
+    """``rounds`` unrolled peels of the k-core of canonical ``(u, v)``
+    edges; returns the surviving ``(s, n)`` rows (both orientations)."""
     # Truncate lineage per peel — without this every round's lazy chain
     # re-executes all prior rounds per action (the BFS lesson).
-    sym = sym.localCheckpoint(eager=True)
-    for _ in range(KCORE_ROUNDS):
-        deg = sym.groupBy("s").agg(F.count(F.lit(1)).alias("d"))
-        keep = deg.filter(F.col("d") >= KCORE_K).select("s")
-        sym = (
-            sym.join(keep, "s", "left_semi")
-            .join(keep.select(F.col("s").alias("n")), "n", "left_semi")
-            .localCheckpoint(eager=True)
-        )
-    return sym.groupBy(F.col("s").alias("node")).agg(
-        F.count(F.lit(1)).alias("degree")
-    )
+    sym = _sn_edges(e).localCheckpoint(eager=True)
+    for _ in range(rounds):
+        sym = kcore_peel(sym, k).localCheckpoint(eager=True)
+    return sym
+
+
+def kcore_degrees(sym: DataFrame) -> DataFrame:
+    """``(node, degree)`` of the surviving ``(s, n)`` rows."""
+    return sym.groupBy(F.col("s").alias("node")).agg(F.count(F.lit(1)).alias("degree"))
 
 
 KCORE_CONV_ORACLE_LEVELS = 20  # must exceed the real peel count; the
@@ -1143,12 +1138,7 @@ _KCORE_GADGET_SQL = """
 @query(
     "graph_kcore_converged",
     oracle=f"""
-        WITH lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        pe AS (
-            SELECT a.p AS u, b.p AS v
-            FROM lp a JOIN lp b ON a.o = b.o AND a.p < b.p
-            GROUP BY 1, 2 HAVING COUNT(*) >= {TRIANGLE_MIN_SUPPORT}
-        ),
+        WITH {_part_edges_sql("pe")},
         alle AS (
             SELECT u, v FROM pe
             UNION ALL
@@ -1178,25 +1168,8 @@ _KCORE_GADGET_SQL = """
     "key + a 1-row survivor count; lineage truncated per round.",
 )
 def graph_kcore_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from minispark_spark.functions.pairs import sorted_pair_structs
-
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("parts")
-    )
-    e = (
-        baskets.select(F.explode(sorted_pair_structs("parts", "u", "v")).alias("p"))
-        .groupBy("p.u", "p.v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= TRIANGLE_MIN_SUPPORT)
-        .select("u", "v")
-        .unionByName(
-            li.sparkSession.createDataFrame(_kcore_gadget_pairs(), "u long, v long")
-        )
-    )
-    sym = e.select(F.col("u").alias("s"), F.col("v").alias("n")).unionAll(
-        e.select(F.col("v").alias("s"), F.col("u").alias("n"))
-    )
+    gadget = spark.createDataFrame(_kcore_gadget_pairs(), "u long, v long")
+    sym = _sn_edges(part_edges(spark, sf_dir).unionByName(gadget))
     # LAZY checkpoints: the per-round convergence count below is the
     # materializing action, so each peel runs ONE job (guide §1.2).
     # Convergence is detected on the EDGE count (a scan-count of the
@@ -1208,13 +1181,7 @@ def graph_kcore_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev_edges = sym.count()
     rounds = 0
     while rounds < KCORE_CONV_MAX_ROUNDS:
-        deg = sym.groupBy("s").agg(F.count(F.lit(1)).alias("d"))
-        keep = deg.filter(F.col("d") >= KCORE_K).select("s")
-        sym = (
-            sym.join(keep, "s", "left_semi")
-            .join(keep.select(F.col("s").alias("n")), "n", "left_semi")
-            .localCheckpoint(eager=False)
-        )
+        sym = kcore_peel(sym, KCORE_K).localCheckpoint(eager=False)
         rounds += 1
         n_edges = sym.count()  # materializes the round's checkpoint
         if n_edges == prev_edges:
@@ -1224,9 +1191,8 @@ def graph_kcore_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(
             f"graph_kcore_converged: no fixpoint after {KCORE_CONV_MAX_ROUNDS} rounds"
         )
-    return sym.groupBy(F.col("s").alias("node")).agg(
-        F.count(F.lit(1)).alias("degree"),
-        F.lit(rounds > KCORE_ROUNDS).alias("converged_beyond_unroll"),
+    return kcore_degrees(sym).withColumn(
+        "converged_beyond_unroll", F.lit(rounds > KCORE_ROUNDS)
     )
 
 
@@ -1278,25 +1244,32 @@ from minispark_spark.registry import REGISTRY as _REG  # noqa: E402
     "edge frame — no new large shuffle.",
 )
 def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    comm = graph_label_propagation(spark, sf_dir)
     e = _edges(spark, sf_dir)
-    name = lambda col: F.concat(  # noqa: E731 — numeric id -> display name
-        F.when(F.col(col) % 2 == 0, F.lit("c")).otherwise(F.lit("s")),
-        F.shiftright(F.col(col), 1).cast("string"),
+    labels = label_propagation(symmetric_edges(e))
+    comm = labels.select("node", F.col("label").alias("community"))
+    return modularity(e, comm).select(
+        display_name("community").alias("community"), "d_c", "l_c", "q_term"
     )
-    nedges = e.select(name("src").alias("src"), name("dst").alias("dst")).cache()
-    mm = F.broadcast(nedges.agg(F.count(F.lit(1)).alias("m")))
+
+
+def modularity(e: DataFrame, comm: DataFrame) -> DataFrame:
+    """``(community, d_c, l_c, q_term)``: Newman modularity terms of the
+    assignment ``comm(node, community)`` over the distinct undirected
+    ``(src, dst)`` edges ``e``; q_term = L_c/m - (D_c/2m)^2 from exact
+    integer counts. Two joined counts over the edge frame, no new large
+    shuffle."""
+    mm = F.broadcast(e.agg(F.count(F.lit(1)).alias("m")))
     cs = comm.select(F.col("node").alias("src"), F.col("community").alias("c_src"))
     cd = comm.select(F.col("node").alias("dst"), F.col("community").alias("c_dst"))
     intra = (
-        nedges.join(cs, "src")
+        e.join(cs, "src")
         .join(cd, "dst")
         .filter(F.col("c_src") == F.col("c_dst"))
         .groupBy(F.col("c_src").alias("community"))
         .agg(F.count(F.lit(1)).alias("l_c"))
     )
-    endpoints = nedges.select(F.col("src").alias("node")).unionByName(
-        nedges.select(F.col("dst").alias("node"))
+    endpoints = e.select(F.col("src").alias("node")).unionByName(
+        e.select(F.col("dst").alias("node"))
     )
     deg = (
         endpoints.join(comm, "node")
@@ -1325,12 +1298,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "graph_clustering_coefficient",
     oracle=f"""
-        WITH lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        e AS (
-            SELECT a.p AS u, b.p AS v
-            FROM lp a JOIN lp b ON a.o = b.o AND a.p < b.p
-            GROUP BY 1, 2 HAVING COUNT(*) >= {{MS}}
-        ),
+        WITH {_part_edges_sql()},
         tri AS (
             SELECT e1.u AS a, e1.v AS b, e2.v AS c
             FROM e e1
@@ -1356,7 +1324,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
                / CAST(deg.d * (deg.d - 1) AS DOUBLE) AS cc
         FROM deg LEFT JOIN tcnt USING (node)
         WHERE deg.d >= 2
-    """.replace("{MS}", str(TRIANGLE_MIN_SUPPORT)),
+    """,
     doc="Local clustering coefficient per node of the part co-occurrence "
     "graph: cc = 2*T_v / (d_v*(d_v-1)) from the SAME vertex-ordered "
     "edge and triangle frames as graph_triangle_count (each a<b<c "
@@ -1366,41 +1334,19 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "community parts — pairs with graph_modularity's global view.",
 )
 def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tri = graph_triangle_count(spark, sf_dir)
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("parts")
-    )
-    pair = F.explode(
-        F.expr(
-            "flatten(transform(parts, (x, i) -> "
-            "transform(slice(parts, i + 2, size(parts)), y -> "
-            "struct(x AS u, y AS v))))"
-        )
-    )
-    e = (
-        baskets.select(pair.alias("p"))
-        .groupBy("p.u", "p.v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= TRIANGLE_MIN_SUPPORT)
-        .select("u", "v")
-    )
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    tcnt = (
-        tri.select(F.col("node_a").alias("node"))
-        .unionByName(tri.select(F.col("node_b").alias("node")))
-        .unionByName(tri.select(F.col("node_c").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("t"))
-    )
+    e = part_edges(spark, sf_dir).cache()
+    e.count()  # materialize: degrees and the three triangle scans
+    return clustering(e)
+
+
+def clustering(e: DataFrame) -> DataFrame:
+    """``(node, degree, triangles, cc)`` for nodes of degree >= 2 over
+    canonical (u < v, distinct, cached) edges: cc = 2*T/(d*(d-1)) from
+    exact integer counts, one IEEE division per node."""
     t = F.coalesce(F.col("t"), F.lit(0))
     return (
-        deg.join(tcnt, "node", "left")
+        _endpoint_degrees(e)
+        .join(triangle_corners(triangles(e)), "node", "left")
         .filter(F.col("d") >= 2)
         .select(
             "node",
@@ -1414,12 +1360,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "graph_assortativity",
     oracle=f"""
-        WITH lp AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        e AS (
-            SELECT a.p AS u, b.p AS v
-            FROM lp a JOIN lp b ON a.o = b.o AND a.p < b.p
-            GROUP BY 1, 2 HAVING COUNT(*) >= {{MS}}
-        ),
+        WITH {_part_edges_sql()},
         deg AS (
             SELECT node, COUNT(*) AS d FROM (
                 SELECT u AS node FROM e UNION ALL SELECT v AS node FROM e
@@ -1442,7 +1383,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
                / nullif(sqrt(CAST(m * sxx - sx * sx AS DOUBLE))
                         * sqrt(CAST(m * syy - sy * sy AS DOUBLE)), 0.0) AS r
         FROM s
-    """.replace("{MS}", str(TRIANGLE_MIN_SUPPORT)),
+    """,
     doc="Degree assortativity (Newman 2002) of the part co-occurrence "
     "graph: Pearson correlation of degrees across edge endpoints (each "
     "undirected edge contributes both orientations) — positive means "
@@ -1452,31 +1393,14 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     "frame.",
 )
 def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("parts")
-    )
-    pair = F.explode(
-        F.expr(
-            "flatten(transform(parts, (x, i) -> "
-            "transform(slice(parts, i + 2, size(parts)), y -> "
-            "struct(x AS u, y AS v))))"
-        )
-    )
-    e = (
-        baskets.select(pair.alias("p"))
-        .groupBy("p.u", "p.v")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .filter(F.col("w") >= TRIANGLE_MIN_SUPPORT)
-        .select("u", "v")
-        .cache()
-    )
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    return assortativity(part_edges(spark, sf_dir).cache())
+
+
+def assortativity(e: DataFrame) -> DataFrame:
+    """``(n_ends, r)``: Pearson correlation of endpoint degrees over both
+    orientations of canonical (u < v, distinct, cached) edges, from
+    exact integer cross-multiplied sums."""
+    deg = _endpoint_degrees(e)
     du = F.broadcast(deg.select(F.col("node").alias("u"), F.col("d").alias("xu")))
     dv = F.broadcast(deg.select(F.col("node").alias("v"), F.col("d").alias("xv")))
     joined = e.join(du, "u").join(dv, "v")
@@ -1566,71 +1490,35 @@ _PPR_ITERS = ",".join(
     "hold rank 0 and are filtered.",
 )
 def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _edges(spark, sf_dir)
-    sym = e.unionByName(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).cache()
+    is_seed = (F.col("node") % 2 == 0) & (F.col("node") < 2 * PPR_SEED_MAX_CUSTKEY)
+    ranks = personalized_pagerank(_edges(spark, sf_dir), is_seed)
+    return ranks.select(display_name("node").alias("node"), "rank")
+
+
+def personalized_pagerank(
+    edges: DataFrame, is_seed: Column, n_iter: int = N_ITER
+) -> DataFrame:
+    """``(node, rank)`` with rank > 0: damping-0.85 PageRank over the
+    symmetrized ``(src, dst)`` edges whose teleport mass goes only to
+    nodes matching ``is_seed`` (a Column predicate on ``node``). Nodes
+    unreachable from the seeds hold rank 0 and are filtered."""
+    sym = _both_ways(edges).cache()
     nodes = sym.select(F.col("src").alias("node")).distinct().cache()
-    is_seed = (F.col("node") % 2 == 0) & (
-        F.col("node") < 2 * PPR_SEED_MAX_CUSTKEY
-    )
     n_seeds = nodes.filter(is_seed).count()  # bounded: seed-set size
     if n_seeds == 0:
-        return nodes.select(
-            F.lit("").alias("node"), F.lit(0).cast("long").alias("rank")
-        ).limit(0)
+        # Same (node, rank) schema as the normal path — a result schema
+        # must not depend on the data.
+        return nodes.select("node", F.lit(0).cast("long").alias("rank")).limit(0)
     init = SCALE // n_seeds
     base = (15 * SCALE // 100) // n_seeds
-    outdeg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    # Zero-contribution self rows (real=false): the per-round aggregate
-    # covers EVERY node, so the new rank is a projection of the
-    # partition-local aggregate — no per-round nodes join, no broadcast
-    # build of the contribution frame (round 8, the pagerank_fixed
-    # pattern; the seed-teleport term is an expression on the node id,
-    # so it needs no node-frame lookup either).
-    wedges = (
-        sym.join(outdeg, "src")
-        .withColumn("real", F.lit(True))
-        .unionByName(
-            nodes.select(
-                F.col("node").alias("src"),
-                F.col("node").alias("dst"),
-                F.lit(1).alias("outdeg"),
-                F.lit(False).alias("real"),
-            )
-        )
-        .repartition("dst")
-        .cache()
-    )
-    wedges.count()
-    hint = F.broadcast  # node count bounded at these scales (see pagerank)
-    c = F.when(
-        F.col("real"), (F.col("rank") / F.col("outdeg")).cast("long")
-    ).otherwise(F.lit(0).cast("long"))
+    # The seed-teleport term is an expression on the node id, so it
+    # needs no node-frame lookup: with _rank_wedges' zero-contribution
+    # self rows, each round is one partition-local pass (round 8).
+    wedges = _rank_wedges(sym, nodes)
     ranks = nodes.select(
         "node", F.when(is_seed, init).otherwise(0).cast("long").alias("rank")
     )
-    for _ in range(N_ITER):
-        contrib = (
-            wedges.join(hint(ranks), F.col("src") == F.col("node"))
-            .select(F.col("dst").alias("node"), c.alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("in_sum"))
-        )
-        ranks = (
-            contrib.select(
-                "node",
-                (
-                    F.when(is_seed, base).otherwise(0)
-                    + (F.lit(85) * F.col("in_sum") / F.lit(100)).cast("long")
-                ).alias("rank"),
-            )
-            # LAZY: next round's broadcast build materializes it —
-            # one reference per round, no dedicated job (§1.2).
-            .localCheckpoint(eager=False)
-        )
-    name = F.concat(
-        F.when(F.col("node") % 2 == 0, F.lit("c")).otherwise(F.lit("s")),
-        F.shiftright(F.col("node"), 1).cast("string"),
-    )
-    return ranks.filter(F.col("rank") > 0).select(name.alias("node"), "rank")
+    teleport = F.when(is_seed, base).otherwise(0)
+    # F.broadcast: the node count is bounded at these scales (see pagerank).
+    ranks = _pagerank_rounds(wedges, ranks, teleport, n_iter, F.broadcast)
+    return ranks.filter(F.col("rank") > 0)

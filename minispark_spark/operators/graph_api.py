@@ -4,25 +4,39 @@ API modeled on the public GraphFrames package surface (a graph is a
 pair of DataFrames: ``vertices(id, ...)`` and ``edges(src, dst, ...)``
 with degrees / pageRank / connectedComponents / triangleCount views),
 re-expressed purely with the engine's DataFrame primitives — no
-external package. The iterative algorithms are the registry-verified
-ones (operators/graph.py pagerank_fixed; the min-label propagation
-that dedup_connected_components pins against a recursive-CTE oracle),
-so this module is a veneer, not a second implementation.
+external package. Every algorithm method is a veneer: it prepares the
+edge frame (symmetric, or canonical undirected u < v), calls the
+registry-verified kernel in operators/graph.py, and renames the output
+to ``id``. The kernels' scale notes therefore apply unchanged.
 
-Scale notes are inherited from the primitives: PageRank broadcasts the
-rank vector and keeps the edge table cached partitioned-by-dst (zero
-per-iteration edge shuffles below BROADCAST_MAX_NODES); connected
-components shuffles once per round on the 8-byte node key and
-converges in O(diameter) rounds; triangle counting uses vertex-ordered
-edges so each triangle is emitted exactly once.
+Connected components live here, as the one implementation that the
+facade, the graph_components_star entry, dedup and corpus share: a
+driver union-find for bounded edge sets, large-star/small-star
+contraction (O(log n) rounds) above that.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from minispark_spark.operators.graph import SCALE, pagerank_fixed
+from minispark_spark.operators.graph import (
+    SCALE,
+    assortativity,
+    bfs,
+    canonical_edges,
+    clustering,
+    kcore,
+    kcore_degrees,
+    label_propagation,
+    link_prediction_scores,
+    modularity,
+    pagerank_fixed,
+    personalized_pagerank,
+    symmetric_edges,
+    triangle_corners,
+    triangles,
+)
 
 
 DRIVER_CC_MAX_EDGES = 200_000
@@ -276,13 +290,18 @@ class Graph:
 
     def degrees(self) -> DataFrame:
         """Total degree per vertex (isolated vertices included, 0)."""
-        both = self.edges.select(F.col("src").alias("id")).unionByName(
-            self.edges.select(F.col("dst").alias("id"))
+        both = self.edges.select(F.col("src").alias("node")).unionByName(
+            self.edges.select(F.col("dst").alias("node"))
         )
-        counted = both.groupBy("id").agg(F.count(F.lit(1)).alias("degree"))
-        return self.vertices.select("id").join(counted, "id", "left").select(
-            "id", F.coalesce(F.col("degree"), F.lit(0)).alias("degree")
-        )
+        counted = both.groupBy("node").agg(F.count(F.lit(1)).alias("degree"))
+        return self._per_vertex(counted, "degree", F.lit(0))
+
+    def _per_vertex(self, df: DataFrame, col: str, default: Column) -> DataFrame:
+        """``(id, col)`` for EVERY vertex from a ``(node, col)`` frame;
+        vertices absent from it get ``default``."""
+        return self.vertices.select("id").join(
+            df.withColumnRenamed("node", "id"), "id", "left"
+        ).select("id", F.coalesce(F.col(col), default).alias(col))
 
     # -- algorithms -------------------------------------------------------
 
@@ -299,56 +318,21 @@ class Graph:
     def bfs(self, source, max_hops: int = 4) -> DataFrame:
         """``(id, hops)`` — shortest hop counts from ``source`` over the
         symmetrized edge set, ``max_hops`` min-fold levels (the
-        graph_bfs_hops core: one join + one min groupBy per level, the
-        reached set dedups each round so paths are never enumerated)."""
-        sym = self.edges.select("src", "dst").unionByName(
-            self.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).cache()
-        reached = sym.sparkSession.range(1).select(
-            F.lit(source).alias("id"), F.lit(0).alias("hops")
-        )
-        for _ in range(max_hops):
-            nxt = reached.join(sym, reached["id"] == sym["src"]).select(
-                F.col("dst").alias("id"), (F.col("hops") + 1).alias("hops")
-            )
-            reached = (
-                reached.unionByName(nxt).groupBy("id").agg(F.min("hops").alias("hops"))
-            )
-            # Truncate lineage each level (matching graph_bfs_hops):
-            # without this the lazy chain re-executes all prior levels
-            # per action — O(H^2) edge scans (measured 1.9x on the
-            # registry BFS).
-            reached = reached.localCheckpoint(eager=True)
-        return reached
+        graph_bfs_hops kernel)."""
+        reached = bfs(symmetric_edges(self.edges.select("src", "dst")), source, max_hops)
+        return reached.select(F.col("node").alias("id"), F.col("h").alias("hops"))
 
     def label_propagation(self, n_rounds: int = 3) -> DataFrame:
         """``(id, community)`` — synchronous label propagation with the
-        deterministic min-label tie-break (graph_label_propagation
-        core): each round the label vector broadcasts against the
-        symmetrized edges and the argmax is a map-side-combined
-        max(struct). Isolated vertices keep their own label. Known
+        deterministic min-label tie-break (the graph_label_propagation
+        kernel). Isolated vertices keep their own label. Known
         synchronous-LP caveat (GraphFrames documents the same): a
         bipartite component can OSCILLATE between two labelings —
         communities are meaningful within a round parity, not a
         fixpoint."""
-        from minispark_spark.operators.graph import lp_round
-
-        sym = self.edges.select("src", "dst").unionByName(
-            self.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        labels = (
-            sym.select(F.col("src").alias("node"))
-            .distinct()
-            .select("node", F.col("node").alias("label"))
-        )
-        for _ in range(n_rounds):
-            # Truncate lineage per round (the BFS/PageRank lesson).
-            labels = lp_round(sym, labels).localCheckpoint(eager=True)
-        return (
-            self.vertices.select("id")
-            .join(labels, self.vertices["id"] == labels["node"], "left")
-            .select("id", F.coalesce(F.col("label"), F.col("id")).alias("community"))
-        )
+        sym = symmetric_edges(self.edges.select("src", "dst"))
+        labels = label_propagation(sym, n_rounds).withColumnRenamed("label", "community")
+        return self._per_vertex(labels, "community", F.col("id"))
 
     def connected_components(self) -> DataFrame:
         """``(id, component)`` for EVERY vertex; component = min vertex
@@ -357,46 +341,17 @@ class Graph:
         sym = undirected.select(
             F.col("src").alias("a"), F.col("dst").alias("b")
         ).unionByName(undirected.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        labels = connected_components_labels(sym)
-        return self.vertices.select("id").join(
-            labels, self.vertices["id"] == labels["node"], "left"
-        ).select(
-            "id", F.coalesce(F.col("label"), F.col("id")).alias("component")
-        )
+        labels = connected_components_labels(sym).withColumnRenamed("label", "component")
+        return self._per_vertex(labels, "component", F.col("id"))
 
     def triangle_count(self) -> DataFrame:
         """Per-vertex triangle participation count ``(id, count)``,
         treating edges as undirected (GraphFrames semantics). Each
         triangle is enumerated once via vertex-ordered canonical edges,
         then contributes 1 to each of its three corners."""
-        canon = (
-            self.edges.select(
-                F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-            )
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .cache()
-        )
-        e1, e2, e3 = canon.alias("e1"), canon.alias("e2"), canon.alias("e3")
-        tri = (
-            e1.join(e2, F.col("e2.u") == F.col("e1.v"))
-            .join(
-                e3,
-                (F.col("e3.u") == F.col("e1.u")) & (F.col("e3.v") == F.col("e2.v")),
-                "left_semi",
-            )
-            .select(
-                F.col("e1.u").alias("a"), F.col("e1.v").alias("b"), F.col("e2.v").alias("c")
-            )
-        )
-        corners = (
-            tri.select(F.col("a").alias("id"))
-            .unionByName(tri.select(F.col("b").alias("id")))
-            .unionByName(tri.select(F.col("c").alias("id")))
-        )
-        counted = corners.groupBy("id").agg(F.count(F.lit(1)).alias("count"))
-        return self.vertices.select("id").join(counted, "id", "left").select(
-            "id", F.coalesce(F.col("count"), F.lit(0)).alias("count")
+        corners = triangle_corners(triangles(canonical_edges(self.edges).cache()))
+        return self._per_vertex(
+            corners.withColumnRenamed("t", "count"), "count", F.lit(0)
         )
 
     def link_prediction(self, deg_cap: int = 40, min_cn: int = 2) -> DataFrame:
@@ -405,230 +360,56 @@ class Graph:
         recommendation), treating edges as undirected. Middles with
         degree > ``deg_cap`` are excluded from the intersection count —
         the standard hub guard that keeps the pair expansion from going
-        quadratic on celebrity nodes — so the Jaccard is a lower bound.
-        Thin veneer over the oracle-verified graph_link_prediction core
-        (operators/graph.py); equivalence pinned in test_graph_api.py."""
-        from minispark_spark.operators.graph import link_prediction_scores
-
-        canon = (
-            self.edges.select(
-                F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-            )
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
+        quadratic on celebrity nodes — so the Jaccard is a lower bound
+        (the graph_link_prediction kernel)."""
+        return link_prediction_scores(
+            canonical_edges(self.edges), deg_cap=deg_cap, min_cn=min_cn
         )
-        return link_prediction_scores(canon, deg_cap=deg_cap, min_cn=min_cn)
 
     def k_core(self, k: int = 4, max_rounds: int = 4) -> DataFrame:
         """``(id, degree)`` for vertices surviving ``max_rounds`` peels
         of the k-core decomposition (drop degree < k, repeat), edges
-        undirected. Production loops until no vertex drops; the bounded
-        unroll matches the oracle-verified graph_kcore registry query.
-        Each peel localCheckpoints (the BFS lineage lesson)."""
-        und = self.edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-        sym = und.select(F.col("src").alias("s"), F.col("dst").alias("n")).unionByName(
-            und.select(F.col("dst").alias("s"), F.col("src").alias("n"))
-        ).distinct().localCheckpoint(eager=True)
-        for _ in range(max_rounds):
-            deg = sym.groupBy("s").agg(F.count(F.lit(1)).alias("d"))
-            keep = deg.filter(F.col("d") >= k).select("s")
-            sym = (
-                sym.join(keep, "s", "left_semi")
-                .join(keep.select(F.col("s").alias("n")), "n", "left_semi")
-                .localCheckpoint(eager=True)
-            )
-        return sym.groupBy(F.col("s").alias("id")).agg(
-            F.count(F.lit(1)).alias("degree")
-        )
+        undirected — the graph_kcore kernel. Production loops until no
+        vertex drops (graph_kcore_converged, same peel round)."""
+        degrees = kcore_degrees(kcore(canonical_edges(self.edges), k, max_rounds))
+        return degrees.withColumnRenamed("node", "id")
 
     def modularity(self, communities: DataFrame | None = None) -> DataFrame:
         """``(community, d_c, l_c, q_term)`` — Newman modularity terms of
         a community assignment over the undirected view of this graph
-        (graph_modularity core). ``communities`` is any (id, community)
-        frame; defaults to :meth:`label_propagation`. Total Q is the sum
-        of ``q_term`` — left to the caller so no float summation hides
-        in the engine. Cost: two counts over the edge frame joined to
-        the assignment; no new large shuffle."""
-        comm = (communities or self.label_propagation()).select("id", "community")
-        und = self.edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
-        mm = F.broadcast(und.agg(F.count(F.lit(1)).alias("m")))
-        intra = (
-            und.join(comm.select(F.col("id").alias("src"), F.col("community").alias("c_src")), "src")
-            .join(comm.select(F.col("id").alias("dst"), F.col("community").alias("c_dst")), "dst")
-            .filter(F.col("c_src") == F.col("c_dst"))
-            .groupBy(F.col("c_src").alias("community"))
-            .agg(F.count(F.lit(1)).alias("l_c"))
+        (the graph_modularity kernel). ``communities`` is any (id,
+        community) frame; defaults to :meth:`label_propagation`. Total Q
+        is the sum of ``q_term`` — left to the caller so no float
+        summation hides in the engine."""
+        comm = (communities or self.label_propagation()).select(
+            F.col("id").alias("node"), "community"
         )
-        endpoints = und.select(F.col("src").alias("id")).unionByName(
-            und.select(F.col("dst").alias("id"))
-        )
-        deg = endpoints.join(comm, "id").groupBy("community").agg(
-            F.count(F.lit(1)).alias("d_c")
-        )
-        md = F.col("m").cast("double")
-        dd = F.col("d_c").cast("double")
-        lc = F.coalesce(F.col("l_c"), F.lit(0))
-        return (
-            deg.join(intra, "community", "left")
-            .crossJoin(mm)
-            .select(
-                "community",
-                "d_c",
-                lc.cast("bigint").alias("l_c"),
-                (
-                    lc.cast("double") / md
-                    - (dd / (2 * F.col("m")).cast("double"))
-                    * (dd / (2 * F.col("m")).cast("double"))
-                ).alias("q_term"),
-            )
-        )
+        und = canonical_edges(self.edges)
+        return modularity(und.select(F.col("u").alias("src"), F.col("v").alias("dst")), comm)
 
     def clustering_coefficient(self) -> DataFrame:
         """``(id, degree, triangles, cc)`` for vertices of undirected
         degree >= 2: cc = 2*T / (d*(d-1)) from exact integer counts
-        (graph_clustering_coefficient core). Vertices of degree < 2
-        have no defined coefficient and are omitted."""
-        canon = (
-            self.edges.select(
-                F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-            )
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        deg = (
-            canon.select(F.col("u").alias("id"))
-            .unionByName(canon.select(F.col("v").alias("id")))
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("degree"))
-        )
-        tri = self.triangle_count().withColumnRenamed("count", "triangles")
-        t = F.coalesce(F.col("triangles"), F.lit(0))
-        return (
-            deg.join(tri, "id", "left")
-            .filter(F.col("degree") >= 2)
-            .select(
-                "id",
-                F.col("degree").cast("bigint").alias("degree"),
-                t.cast("bigint").alias("triangles"),
-                (
-                    (2 * t).cast("double")
-                    / (F.col("degree") * (F.col("degree") - 1)).cast("double")
-                ).alias("cc"),
-            )
-        )
+        (the graph_clustering_coefficient kernel). Vertices of degree
+        < 2 have no defined coefficient and are omitted."""
+        return clustering(canonical_edges(self.edges).cache()).withColumnRenamed("node", "id")
 
     def assortativity(self) -> DataFrame:
         """``(n_ends, r)`` — Newman degree assortativity over the
-        undirected view (graph_assortativity core): Pearson correlation
-        of endpoint degrees with both orientations of every edge, from
-        exact integer cross-multiplied sums."""
-        canon = (
-            self.edges.select(
-                F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-            )
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .cache()
-        )
-        deg = (
-            canon.select(F.col("u").alias("node"))
-            .unionByName(canon.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        du = F.broadcast(deg.select(F.col("node").alias("u"), F.col("d").alias("xu")))
-        dv = F.broadcast(deg.select(F.col("node").alias("v"), F.col("d").alias("xv")))
-        joined = canon.join(du, "u").join(dv, "v")
-        ends = joined.select(
-            F.col("xu").alias("x"), F.col("xv").alias("y")
-        ).unionByName(joined.select(F.col("xv").alias("x"), F.col("xu").alias("y")))
-        s = ends.agg(
-            F.count(F.lit(1)).alias("m"),
-            F.sum(F.col("x") * F.col("y")).alias("sxy"),
-            F.sum("x").alias("sx"),
-            F.sum("y").alias("sy"),
-            F.sum(F.col("x") * F.col("x")).alias("sxx"),
-            F.sum(F.col("y") * F.col("y")).alias("syy"),
-        )
-        num = (F.col("m") * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-        den = F.nullif(
-            F.sqrt(
-                (F.col("m") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-            )
-            * F.sqrt(
-                (F.col("m") * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
-            ),
-            F.lit(0.0),
-        )
-        return s.select(
-            F.col("m").cast("bigint").alias("n_ends"), (num / den).alias("r")
-        )
+        undirected view (the graph_assortativity kernel): Pearson
+        correlation of endpoint degrees with both orientations of every
+        edge, from exact integer cross-multiplied sums."""
+        return assortativity(canonical_edges(self.edges).cache())
 
     def personalized_page_rank(self, seeds, n_iter: int = 3) -> DataFrame:
         """``(id, rank)`` — personalized PageRank: teleport mass is
         restricted to ``seeds`` (a list of vertex ids or a 1-column
-        DataFrame), damping 0.85, BIGINT fixed-point (the
-        graph_personalized_pagerank core — integer contribution sums
-        are shuffle-order-insensitive). Vertices unreachable from the
-        seeds hold rank 0 and are filtered."""
-        from minispark_spark.operators.graph import SCALE
-
-        if not isinstance(seeds, DataFrame):
-            seeds = self.vertices.sparkSession.createDataFrame(
-                [(s,) for s in seeds], self.vertices.select("id").schema
-            )
-        seeds = seeds.select(F.col(seeds.columns[0]).alias("node")).distinct()
-        sym = self.edges.select("src", "dst").unionByName(
-            self.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).cache()
-        nodes = sym.select(F.col("src").alias("node")).distinct().cache()
-        seeded = nodes.join(F.broadcast(seeds), "node", "left_semi").cache()
-        n_seeds = seeded.count()  # bounded: seed-set size
-        if n_seeds == 0:
-            # Same (id, rank) schema as the normal path — a result
-            # schema must not depend on the data.
-            return nodes.select(
-                F.col("node").alias("id"), F.lit(0).cast("long").alias("rank")
-            ).limit(0)
-        init = SCALE // n_seeds
-        base = (15 * SCALE // 100) // n_seeds
-        flag = nodes.join(
-            F.broadcast(seeded.select("node", F.lit(True).alias("is_seed"))),
-            "node",
-            "left",
-        ).select("node", F.coalesce(F.col("is_seed"), F.lit(False)).alias("is_seed"))
-        flag = flag.cache()
-        outdeg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-        wedges = sym.join(outdeg, "src").repartition("dst").cache()
-        ranks = flag.select(
-            "node", F.when(F.col("is_seed"), init).otherwise(0).cast("long").alias("rank")
-        )
-        for _ in range(n_iter):
-            contrib = (
-                wedges.join(F.broadcast(ranks), F.col("src") == F.col("node"))
-                .select(
-                    F.col("dst").alias("node"),
-                    (F.col("rank") / F.col("outdeg")).cast("long").alias("c"),
-                )
-                .groupBy("node")
-                .agg(F.sum("c").alias("in_sum"))
-            )
-            ranks = (
-                flag.join(F.broadcast(contrib), "node", "left")
-                .select(
-                    "node",
-                    (
-                        F.when(F.col("is_seed"), base).otherwise(0)
-                        + (
-                            F.lit(85) * F.coalesce(F.col("in_sum"), F.lit(0)) / F.lit(100)
-                        ).cast("long")
-                    ).alias("rank"),
-                )
-                # LAZY: the next iteration's broadcast build (or the
-                # caller's action) materializes it within a job it
-                # already runs — no dedicated per-round job (§1.2).
-                .localCheckpoint(eager=False)
-            )
-        return ranks.filter(F.col("rank") > 0).select(
-            F.col("node").alias("id"), "rank"
-        )
+        DataFrame, collected — seed sets are small), damping 0.85,
+        BIGINT fixed-point (the graph_personalized_pagerank kernel).
+        Vertices unreachable from the seeds hold rank 0 and are
+        filtered."""
+        if isinstance(seeds, DataFrame):
+            seeds = [r[0] for r in seeds.select(seeds.columns[0]).distinct().collect()]
+        is_seed = F.col("node").isin(list(seeds))
+        ranks = personalized_pagerank(self.edges.select("src", "dst"), is_seed, n_iter)
+        return ranks.select(F.col("node").alias("id"), "rank")

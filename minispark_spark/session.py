@@ -18,7 +18,10 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Local cores: SPARK_GRAFT_CPUS when set (benchmark and test runs pin
+# it), else the machine's own count.
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+DEFAULT_SHUFFLE_PARTITIONS = CPUS
 
 # Opt-in conf profiles, each backed by a BASELINE.md measurement.
 #
@@ -52,10 +55,9 @@ def get_spark(
     ``profile`` applies a named opt-in conf set from :data:`PROFILES`
     (measurement-backed overrides, e.g. ``"skew-tuned"``);
     ``extra_conf`` still wins on key collisions."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master or f"local[{CPUS}]")
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),

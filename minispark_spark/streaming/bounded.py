@@ -91,18 +91,33 @@ def _docs_stream_src(spark: SparkSession, sf_dir: str, leaf: str = "docs4") -> s
 _SCHEMA_CACHE: dict[tuple[str, str], object] = {}
 
 
+def _dir_version(src: str) -> str:
+    """Version of a source directory: a digest of its sorted
+    ``(name, size, mtime_ns)`` entries. Unlike the newest mtime, it
+    changes when a file with an OLDER mtime is added, removed, or
+    rewritten in place. An empty directory is an error, not a version."""
+    entries = sorted(os.scandir(src), key=lambda d: d.name)
+    if not entries:
+        raise ValueError(f"stream source directory is empty: {src}")
+    listing = "\n".join(
+        f"{d.name}\t{d.stat().st_size}\t{d.stat().st_mtime_ns}" for d in entries
+    )
+    return hashlib.sha1(listing.encode()).hexdigest()[:16]
+
+
 def _read_stream(spark: SparkSession, src: str) -> DataFrame:
     # Schema from the batch reader (streaming file sources require an
     # explicit schema); maxFilesPerTrigger=1 forces one micro-batch per
     # file so cross-batch state is actually exercised. The schema probe
-    # is a driver-side footer job — memoized per (app, src dir, mtime)
-    # so two-stream entries (the joins) and repeated bench passes pay
-    # it once (guide §1.2: fixed job latency dominates these drains).
+    # is a driver-side footer job — memoized per (app, src dir, dir
+    # version) so two-stream entries (the joins) and repeated bench
+    # passes pay it once (guide §1.2: fixed job latency dominates these
+    # drains).
     key = (spark.sparkContext.applicationId, src)
-    mt = max(os.path.getmtime(os.path.join(src, f)) for f in os.listdir(src))
+    version = _dir_version(src)
     hit = _SCHEMA_CACHE.get(key)
-    if hit is None or hit[0] != mt:
-        _SCHEMA_CACHE[key] = hit = (mt, spark.read.parquet(src).schema)
+    if hit is None or hit[0] != version:
+        _SCHEMA_CACHE[key] = hit = (version, spark.read.parquet(src).schema)
     return (
         spark.readStream.schema(hit[1])
         .option("maxFilesPerTrigger", "1")
@@ -906,9 +921,9 @@ def stream_arrow_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _events_stream_src(spark, sf_dir, "events4", dup=False)
     dest = side_dir("/tmp/minispark_streamarrow", sf_dir, "events.arrow")
     stamp = dest + ".stamp"
-    src_mtime = str(max(os.path.getmtime(os.path.join(src, f)) for f in os.listdir(src)))
+    src_version = _dir_version(src)
     with build_lock(dest):
-        if not (os.path.exists(stamp) and open(stamp).read() == src_mtime):
+        if not (os.path.exists(stamp) and open(stamp).read() == src_version):
             import shutil
             import uuid as _uuid
 
@@ -923,7 +938,7 @@ def stream_arrow_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .writeStream.format("arrowipc")
                 .option(
                     "checkpointLocation",
-                    f"{dest}.ckpt-{src_mtime}-{_uuid.uuid4().hex[:8]}",
+                    f"{dest}.ckpt-{src_version}-{_uuid.uuid4().hex[:8]}",
                 )
                 .outputMode("append")
                 .trigger(availableNow=True)
@@ -946,7 +961,7 @@ def stream_arrow_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ):
                     pass
             with open(stamp, "w") as fh:
-                fh.write(src_mtime)
+                fh.write(src_version)
     return (
         spark.read.format("arrowipc")
         .load(dest)

@@ -259,6 +259,45 @@ def test_clustering_matches_registry(spark, sf_dir):
     assert got == want
 
 
+def _part_graph(spark, sf_dir) -> Graph:
+    from minispark_spark.operators.graph import part_edges
+
+    e = part_edges(spark, sf_dir)
+    return Graph.from_edges(e.select(F.col("u").alias("src"), F.col("v").alias("dst")))
+
+
+def test_k_core_matches_registry(spark, sf_dir):
+    from minispark_spark.registry import REGISTRY
+
+    got = {r["id"]: r["degree"] for r in _part_graph(spark, sf_dir).k_core().collect()}
+    want = {r["node"]: r["degree"]
+            for r in REGISTRY["graph_kcore"].fn(spark, sf_dir).collect()}
+    assert got == want
+
+
+def test_triangle_count_matches_registry(spark, sf_dir):
+    """Per-vertex counts == corners of the registry's triangle list;
+    vertices in no triangle report 0."""
+    from collections import Counter
+
+    from minispark_spark.registry import REGISTRY
+
+    got = {r["id"]: r["count"]
+           for r in _part_graph(spark, sf_dir).triangle_count().collect()}
+    corners = Counter()
+    for r in REGISTRY["graph_triangle_count"].fn(spark, sf_dir).collect():
+        corners.update((r["node_a"], r["node_b"], r["node_c"]))
+    assert {k: v for k, v in got.items() if v} == dict(corners)
+
+
+def test_assortativity_matches_registry(spark, sf_dir):
+    from minispark_spark.registry import REGISTRY
+
+    got = _part_graph(spark, sf_dir).assortativity().collect()
+    want = REGISTRY["graph_assortativity"].fn(spark, sf_dir).collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+
+
 def test_personalized_page_rank_seeds_hold_mass(spark):
     """Two disconnected pairs; seeding only one pair keeps ALL rank in
     that component — the other pair must not appear (rank 0)."""

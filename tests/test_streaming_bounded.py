@@ -135,3 +135,37 @@ def test_stream_state_timeout_sessions_expires_and_holds(spark, sf_dir):
     last_user = ev.orderBy(F.col("ts").desc()).select("user_id").first()["user_id"]
     assert out.filter(F.col("user_id") == last_user).count() == 0
     out.unpersist()
+
+
+def test_stream_source_empty_directory_fails_loud(spark, tmp_path):
+    """An empty stream source names its directory in a ValueError
+    instead of surfacing an opaque ``max()`` error."""
+    import re
+
+    src = tmp_path / "empty_src"
+    src.mkdir()
+    with pytest.raises(ValueError, match="empty: " + re.escape(str(src))):
+        bounded._read_stream(spark, str(src))
+
+
+def test_stream_schema_memo_sees_file_with_older_mtime(spark, tmp_path):
+    """The memoized source schema must follow the directory's contents,
+    not its newest mtime: adding a file OLDER than the newest one still
+    invalidates it. Spark infers a parquet directory's schema from the
+    first file by path, so the added ``a.parquet`` decides it."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = tmp_path / "src"
+    src.mkdir()
+    newest = src / "b.parquet"
+    pq.write_table(pa.table({"x": [1, 2]}), newest)
+    t = os.stat(newest).st_mtime_ns
+    assert bounded._read_stream(spark, str(src)).schema.fieldNames() == ["x"]
+
+    older = src / "a.parquet"
+    pq.write_table(pa.table({"x": [3], "y": ["z"]}), older)
+    os.utime(older, ns=(t - 10**11, t - 10**11))
+    assert bounded._read_stream(spark, str(src)).schema.fieldNames() == ["x", "y"]
