@@ -76,8 +76,8 @@ def display_name(col: str) -> Column:
 
 def symmetric_edges(e: DataFrame) -> DataFrame:
     """Both orientations of a ``(src, dst)`` edge frame, cached
-    PARTITIONED BY DST (round 8): the per-round aggregates of BFS, label
-    propagation and the min-label fixpoint all key on dst, so with the
+    PARTITIONED BY DST (round 8): the per-round aggregates of label
+    propagation and the min-label fixpoint key on dst, so with the
     node-sized state broadcast each round plans with ZERO exchanges —
     the edge-sized shuffle is paid once at cache build instead of once
     per round (guide §2.4: two operations keyed the same way share one
@@ -758,60 +758,92 @@ def _bfs_iter_sql(prev: str, nxt: str) -> str:
     f"purchase graph, {BFS_HOPS} unrolled levels (the pagerank/k-means "
     "oracle-unrolling technique — production loops to frontier "
     "exhaustion like dedup_connected_components, same per-level plan). "
-    "Each level is one join on the 8-byte node key + a min-fold "
-    "groupBy — the reached set dedups every level, so no path "
-    "enumeration ever happens (a recursive-CTE walk oracle would "
-    "explode combinatorially on this dense bipartite graph; the "
-    "level-unrolled oracle replays the distributed algorithm instead).",
+    "Each level is one partition-local min-fold aggregate over a cached "
+    "dst-partitioned step frame probed by the broadcast reached set — "
+    "the reached set dedups every level, so no path enumeration ever "
+    "happens (a recursive-CTE walk oracle would explode combinatorially "
+    "on this dense bipartite graph; the level-unrolled oracle replays "
+    "the distributed algorithm instead).",
 )
 def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    reached = bfs(symmetric_edges(_edges(spark, sf_dir)), BFS_SOURCE, BFS_HOPS)
+    reached = bfs(_edges(spark, sf_dir), BFS_SOURCE, BFS_HOPS)
     return reached.select(
         display_name("node").alias("node"), F.col("h").cast("int").alias("hops")
     )
 
 
-def bfs(sym: DataFrame, source, hops: int = BFS_HOPS) -> DataFrame:
-    """``(node, h)``: shortest hop counts from ``source`` over the cached
-    dst-partitioned symmetric edges (:func:`symmetric_edges`), ``hops``
-    min-fold levels. With the frontier aggregate keyed on dst,
-    pre-aggregating each level is partition-local — the union's
-    min-fold then shuffles two NODE-sized frames instead of an
-    edge-sized one per level."""
-    sym.count()  # materialize once; all levels scan it
-    reached = sym.sparkSession.range(1).select(
-        F.lit(source).cast(sym.schema["src"].dataType).alias("node"),
-        F.lit(0).alias("h"),
+def bfs_steps(e: DataFrame, source) -> DataFrame:
+    """``(src, dst, w)``: every move one BFS level can make from a
+    directed ``(src, dst)`` edge frame — both orientations of each edge
+    at ``w = 1``, plus a ``w = 0`` self row for every endpoint and for
+    ``source`` (the zero-contribution self-row trick of
+    :func:`_rank_wedges`: a reached node keeps its own hop count
+    through the same aggregate that relaxes its neighbors). Cached
+    PARTITIONED BY DST; the distinct is partition-local on that
+    layout, so the edge-sized shuffle is paid once per call."""
+    node = F.lit(source).cast(e.schema["src"].dataType)
+    nodes = (
+        e.select(F.col("src").alias("n"))
+        .unionByName(e.select(F.col("dst").alias("n")))
+        .unionByName(e.sparkSession.range(1).select(node.alias("n")))
     )
-    for _ in range(hops):
-        # The reached set is bounded by the node count — broadcast it so
-        # each level probes the cached edges map-side (zero edge
-        # shuffle; pagerank's broadcast-rank-vector pattern, same
-        # >10M-node co-partition fallback applies).
-        nxt = (
-            sym.join(F.broadcast(reached), reached["node"] == sym["src"])
-            .select(F.col("dst").alias("node"), (F.col("h") + 1).alias("h"))
-            .groupBy("node")
-            .agg(F.min("h").alias("h"))  # partition-local on the
-            # dst-partitioned cache; min-of-min below is unchanged
+    return (
+        _both_ways(e)
+        .withColumn("w", F.lit(1))
+        .unionByName(
+            nodes.select(F.col("n").alias("src"), F.col("n").alias("dst"), F.lit(0).alias("w"))
         )
-        reached = (
-            reached.unionByName(nxt).groupBy("node").agg(F.min("h").alias("h"))
-            # Truncate lineage each level: the lazy chain would re-run
-            # ALL prior levels inside every broadcast (O(H^2) edge
-            # scans). localCheckpoint materializes the (node-bounded)
-            # frontier once per level — measured 4.9 -> ~2 s at sf0.1.
-            # (Executor-local storage: on a real cluster a lost
-            # executor forces recompute-from-source; acceptable for a
-            # driver-controlled loop, same trade as RDD.localCheckpoint.)
-            .localCheckpoint(eager=True)
-        )
-        # NOTE: eager is load-bearing here. The next level references
-        # this frame TWICE (broadcast probe + union arm); with a lazy
-        # checkpoint those two consumers race to materialize it and the
-        # level computes twice (the LP final-round lesson). One
-        # materialization job per level is the floor for this loop.
-    return reached
+        .repartition("dst")
+        .distinct()
+        .cache()
+    )
+
+
+def bfs_level(steps: DataFrame, reached: DataFrame) -> DataFrame:
+    """One BFS level, ``(node, h)`` -> ``(node, h)``: the step frame
+    probed by the broadcast reached set, ``(dst, h + w)`` min-folded per
+    dst (exposed so plan tests can pin the per-level shape — the kernel
+    returns a localCheckpoint scan that hides it). On the
+    dst-partitioned steps the aggregate is partition-local: the level
+    plans with no Exchange."""
+    return (
+        steps.join(F.broadcast(reached), F.col("src") == F.col("node"))
+        .select(F.col("dst").alias("node"), (F.col("h") + F.col("w")).alias("h"))
+        .groupBy("node")
+        .agg(F.min("h").alias("h"))
+    )
+
+
+def bfs(e: DataFrame, source, hops: int = BFS_HOPS) -> DataFrame:
+    """``(node, h)``: shortest hop counts from ``source`` over the
+    undirected view of the directed edge frame ``e``, ``hops`` levels.
+    A source with no edges (or not in the graph) returns only
+    ``(source, 0)``; self loops change nothing.
+
+    The reached set is bounded by the node count, so each level after
+    the first broadcasts it against the cached steps
+    (:func:`bfs_steps`) — pagerank's broadcast-rank-vector pattern;
+    level 1 filters the steps on the literal source instead, which
+    saves the one-row broadcast's job. A level references the previous
+    reached set once, so its checkpoint is LAZY: the next level's
+    broadcast build (or the caller's action) materializes it, and that
+    build is the level's only job."""
+    node = F.lit(source).cast(e.schema["src"].dataType)
+    reached = e.sparkSession.range(1).select(node.alias("node"), F.lit(0).alias("h"))
+    if hops == 0:
+        return reached
+    steps = bfs_steps(e, source)
+    reached = steps.filter(F.col("src") == node).groupBy(
+        F.col("dst").alias("node")
+    ).agg(F.min("w").alias("h"))
+    for _ in range(hops - 1):
+        # Truncate lineage each level: a lazy chain would re-run ALL
+        # prior levels inside every broadcast (O(H^2) edge scans).
+        # (Executor-local storage: on a real cluster a lost executor
+        # forces recompute-from-source; acceptable for a
+        # driver-controlled loop, same trade as RDD.localCheckpoint.)
+        reached = bfs_level(steps, reached.localCheckpoint(eager=False))
+    return reached.localCheckpoint(eager=False)
 
 
 LP_ROUNDS = 3

@@ -318,8 +318,9 @@ class Graph:
     def bfs(self, source, max_hops: int = 4) -> DataFrame:
         """``(id, hops)`` — shortest hop counts from ``source`` over the
         symmetrized edge set, ``max_hops`` min-fold levels (the
-        graph_bfs_hops kernel)."""
-        reached = bfs(symmetric_edges(self.edges.select("src", "dst")), source, max_hops)
+        graph_bfs_hops kernel). A source with no edges, or not in the
+        graph, reaches only itself."""
+        reached = bfs(self.edges.select("src", "dst"), source, max_hops)
         return reached.select(F.col("node").alias("id"), F.col("h").alias("hops"))
 
     def label_propagation(self, n_rounds: int = 3) -> DataFrame:

@@ -29,6 +29,11 @@ Scale shape (the whole point of PQ):
   LOCAL top-k rows per query (monotonic prune — the union of
   per-batch top-k supersets the global top-k), so the final
   per-query window ranks Q*k rows per partition, not the corpus.
+* Recall audit: the exact integer-L2 ground truth and the ADC answer
+  come from ONE scan — each Arrow batch emits both batch-local top-k
+  lists per query, tagged by ``kind`` — and one window over
+  ``(kind, query_id)`` ranks both; the hit count is two aggregates on
+  the window's partitioning. The query vectors are collected once.
 * 100 TB of vectors = the same two narrow passes over a bigger scan;
   the only shuffle ships Q * k * n_partitions tiny rows.
 
@@ -74,6 +79,17 @@ _TOPK_SCHEMA = StructType(
         StructField("approx_d2", LongType()),
     ]
 )
+
+
+_RECALL_SCHEMA = StructType(
+    [
+        StructField("kind", IntegerType()),
+        StructField("query_id", LongType()),
+        StructField("neighbor_id", LongType()),
+        StructField("d2", LongType()),
+    ]
+)
+EXACT, ADC = 0, 1  # _RECALL_SCHEMA kinds
 
 
 def _batch_matrix(pdf: pd.DataFrame) -> np.ndarray:
@@ -321,6 +337,24 @@ def _pq_oracle() -> str:
         ) WHERE rk <= {TOP_K}"""
 
 
+def _adc_lut(qmat: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """ADC lookup tables: exact int64 distance from each query subvector
+    to each codeword — (Q, M, K) from qmat (Q, M, SUBDIM) and books
+    (M, K, SUBDIM), built once on the driver, broadcast by closure (Q*M*K
+    longs — ~10 KB at K=16, ~160 KB at K=256)."""
+    return ((qmat[:, :, None, :] - books[None, :, :, :]) ** 2).sum(axis=3)
+
+
+def _local_topk(qid, vids: np.ndarray, d2: np.ndarray, k: int = TOP_K):
+    """One query's batch-local top-``k`` as (neighbor ids, distances),
+    the query itself excluded, ordered by (d2, id) — the monotonic
+    prune: the union of per-batch top-k supersets the global top-k."""
+    mask = vids != qid
+    vd, dd = vids[mask], d2[mask]
+    order = np.lexsort((vd, dd))[:k]
+    return vd[order], dd[order]
+
+
 def _adc_topk(q: DataFrame, books: np.ndarray, qids: np.ndarray, qmat: np.ndarray) -> DataFrame:
     """ADC search shared by every PQ width: per-query (M, K) lookup
     tables broadcast by closure, one narrow scan with batch-local top-k
@@ -329,10 +363,7 @@ def _adc_topk(q: DataFrame, books: np.ndarray, qids: np.ndarray, qmat: np.ndarra
     q: (vec_id, q) quantized vectors; books: (M, K, SUBDIM) int64;
     qmat: (Q, M, SUBDIM) query subvectors.
     """
-    # ADC lookup tables: exact int64 distance from each query subvector
-    # to each codeword — (Q, M, K), built once on the driver, broadcast
-    # by closure (Q*M*K longs — ~10 KB at K=16, ~160 KB at K=256).
-    lut = ((qmat[:, :, None, :] - books[None, :, :, :]) ** 2).sum(axis=3)
+    lut = _adc_lut(qmat, books)
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -345,13 +376,10 @@ def _adc_topk(q: DataFrame, books: np.ndarray, qids: np.ndarray, qmat: np.ndarra
             for qi in range(len(qids)):
                 # d2[v] = sum_m lut[qi, m, codes[v, m]] — M table lookups
                 d2q = lut[qi][marange, codes].sum(axis=1)  # (n,)
-                mask = vids != qids[qi]
-                vd, dd = vids[mask], d2q[mask]
-                # batch-local top-k (monotonic prune): order by (d2, id)
-                order = np.lexsort((vd, dd))[:TOP_K]
-                out["query_id"].extend([int(qids[qi])] * len(order))
-                out["neighbor_id"].extend(int(v) for v in vd[order])
-                out["approx_d2"].extend(int(v) for v in dd[order])
+                vd, dd = _local_topk(qids[qi], vids, d2q)
+                out["query_id"].extend([int(qids[qi])] * len(vd))
+                out["neighbor_id"].extend(int(v) for v in vd)
+                out["approx_d2"].extend(int(v) for v in dd)
             yield pd.DataFrame(out)
 
     cand = q.mapInPandas(batches, schema=_TOPK_SCHEMA)
@@ -391,11 +419,10 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Recall audit: PQ vs exact integer-L2 ground truth ----------------------
 #
 # Same meta-query shape as ann_ivf_recall: compute the exact top-k by
-# brute force (one narrow scan, batch-local top-k prune — the same
-# monotonic trick the PQ search uses, so no corpus-sized shuffle), then
-# measure how many of PQ's compressed-domain answers hit it. This is
-# the measurement that justifies shipping 4-byte codes instead of
-# 256-byte vectors.
+# brute force (batch-local top-k prune — the same monotonic trick the PQ
+# search uses, so no corpus-sized shuffle), then measure how many of
+# PQ's compressed-domain answers hit it. This is the measurement that
+# justifies shipping 4-byte codes instead of 256-byte vectors.
 
 
 def _exact_l2_topk(q: DataFrame, qids: np.ndarray, qfull: np.ndarray) -> DataFrame:
@@ -410,12 +437,10 @@ def _exact_l2_topk(q: DataFrame, qids: np.ndarray, qfull: np.ndarray) -> DataFra
             out = {"query_id": [], "neighbor_id": [], "approx_d2": []}
             for qi in range(len(qids)):
                 d2 = ((m - qfull[qi][None, :]) ** 2).sum(axis=1)
-                mask = vids != qids[qi]
-                vd, dd = vids[mask], d2[mask]
-                order = np.lexsort((vd, dd))[:TOP_K]
-                out["query_id"].extend([int(qids[qi])] * len(order))
-                out["neighbor_id"].extend(int(v) for v in vd[order])
-                out["approx_d2"].extend(int(v) for v in dd[order])
+                vd, dd = _local_topk(qids[qi], vids, d2)
+                out["query_id"].extend([int(qids[qi])] * len(vd))
+                out["neighbor_id"].extend(int(v) for v in vd)
+                out["approx_d2"].extend(int(v) for v in dd)
             yield pd.DataFrame(out)
 
     cand = q.mapInPandas(batches, schema=_TOPK_SCHEMA)
@@ -464,35 +489,72 @@ def _pq_recall_oracle() -> str:
         GROUP BY exact.query_id"""
 
 
+def _recall_candidates(
+    q: DataFrame, books: np.ndarray, qids: np.ndarray, qfull: np.ndarray
+) -> DataFrame:
+    """``(kind, query_id, neighbor_id, d2)`` from ONE narrow scan: per
+    Arrow batch and query, the batch-local exact int64 squared-L2 top-k
+    (kind EXACT) and the batch-local ADC top-k (kind ADC, d2 = the
+    approximate distance). Both sides are the monotonic prune of
+    :func:`_exact_l2_topk` and :func:`_adc_topk`, so a window over
+    ``(kind, query_id)`` recovers each one's global top-k."""
+    lut = _adc_lut(_sub(qfull), books)
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        marange = np.arange(M)[None, :]
+        for pdf in it:
+            if not len(pdf) or not len(qids):
+                continue
+            mat = _batch_matrix(pdf)
+            vids = pdf["vec_id"].to_numpy()
+            codes = _assign_sub(_sub(mat), books)  # (n, M)
+            cols = {"kind": [], "query_id": [], "neighbor_id": [], "d2": []}
+            for qi, qid in enumerate(qids):
+                exact = ((mat - qfull[qi][None, :]) ** 2).sum(axis=1)
+                adc = lut[qi][marange, codes].sum(axis=1)
+                for kind, d2 in ((EXACT, exact), (ADC, adc)):
+                    vd, dd = _local_topk(qid, vids, d2)
+                    cols["kind"].append(np.full(len(vd), kind, dtype=np.int32))
+                    cols["query_id"].append(np.full(len(vd), qid, dtype=np.int64))
+                    cols["neighbor_id"].append(vd)
+                    cols["d2"].append(dd)
+            yield pd.DataFrame({c: np.concatenate(v) for c, v in cols.items()})
+
+    return q.mapInPandas(batches, schema=_RECALL_SCHEMA)
+
+
 @query(
     "ann_pq_recall",
     oracle=_pq_recall_oracle(),
     doc=f"Recall@{TOP_K} audit of PQ/ADC search against exact integer-L2 "
     "brute force — the approximation-quality measurement that justifies "
-    "64x compression. Ground truth is one narrow scan with batch-local "
-    "top-k pruning (no corpus-sized shuffle); both sides deterministic, "
-    "so even this meta-query oracle-matches bit-for-bit.",
+    "64x compression. Ground truth and ADC search share ONE narrow scan "
+    "that emits both batch-local top-k lists (no corpus-sized shuffle), "
+    "ranked by one window; both sides deterministic, so even this "
+    "meta-query oracle-matches bit-for-bit.",
 )
 def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    q, _books = pq_train(spark, sf_dir)
-    queries = q.filter(F.col("vec_id") < N_QUERIES).collect()
-    qids = np.array([r["vec_id"] for r in queries], dtype=np.int64)
-    qfull = np.array([r["q"] for r in queries], dtype=np.int64)
-    exact = _exact_l2_topk(q, qids, qfull)
-    pq_hits = ann_pq_topk(spark, sf_dir).select(
-        F.col("query_id").alias("p_query"), F.col("neighbor_id").alias("p_neighbor")
+    q, books = pq_train(spark, sf_dir)
+    qids, qfull = _query_vectors(q)
+    w = Window.partitionBy("kind", "query_id").orderBy(
+        F.col("d2").asc(), F.col("neighbor_id").asc()
     )
+    top = (
+        _recall_candidates(q, books, qids, qfull)
+        # Hash on query_id alone satisfies the window's (kind, query_id)
+        # clustering AND both aggregates below: one exchange in all.
+        .repartition("query_id")
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= TOP_K)
+    )
+    hit = F.when(F.col("n_kinds") == 2, True)  # in both top-k lists
     return (
-        exact.join(
-            pq_hits,
-            (F.col("p_query") == F.col("query_id"))
-            & (F.col("p_neighbor") == F.col("neighbor_id")),
-            "left",
-        )
+        top.groupBy("query_id", "neighbor_id")
+        .agg(F.count(F.lit(1)).alias("n_kinds"))
         .groupBy("query_id")
         .agg(
-            F.count("p_neighbor").alias("n_hits"),
-            (F.count("p_neighbor").cast("double") / TOP_K).alias("recall_at_k"),
+            F.count(hit).alias("n_hits"),
+            (F.count(hit).cast("double") / TOP_K).alias("recall_at_k"),
         )
     )
 
@@ -537,8 +599,7 @@ def _adc_rerank_topk(
     multiplies per batch — negligible next to the ADC lookups), so the
     re-rank downstream is a window over Q*R tiny rows, never a second
     pass over the corpus."""
-    qmat = _sub(qfull)
-    lut = ((qmat[:, :, None, :] - books[None, :, :, :]) ** 2).sum(axis=3)
+    lut = _adc_lut(_sub(qfull), books)
 
     schema = StructType(
         [

@@ -92,40 +92,28 @@ def clear_plan_cache() -> None:
     # DataFrames are UNPERSISTED as the handle is dropped (round-8
     # ADVICE): dropping only the dict entry left the executor storage
     # for the old copies pinned until an external catalog clearCache.
-    from minispark_spark.operators import dedup, graph, kmeans, pq, semdedup
+    # A handle whose SparkContext has stopped holds no storage and
+    # raises on unpersist: skip it, but still clear every memo.
+    from minispark_spark.operators import dedup, graph, kmeans, pq, semdedup, similarity
 
-    for df in dedup._SHINGLE_CACHE.values():
-        df.unpersist()
-    dedup._SHINGLE_CACHE.clear()
-    for df in dedup._GUARD_CACHE:
-        df.unpersist()
-    dedup._GUARD_CACHE.clear()
-    from minispark_spark.operators import similarity
-
-    for df in similarity._EMB_GUARD_CACHE:
-        df.unpersist()
-    similarity._EMB_GUARD_CACHE.clear()
-    for df in graph._EDGE_CACHE.values():
-        df.unpersist()
-    graph._EDGE_CACHE.clear()
-    for q, _cents in kmeans._FIT_CACHE.values():
-        q.unpersist()
-    kmeans._FIT_CACHE.clear()
-    for df in kmeans._Q_CACHE.values():
-        df.unpersist()
-    kmeans._Q_CACHE.clear()
-    for df in kmeans._EMB_Q_CACHE:
-        df.unpersist()
-    kmeans._EMB_Q_CACHE.clear()
-    for q, _books in pq._TRAIN_CACHE.values():
-        q.unpersist()
-    pq._TRAIN_CACHE.clear()
-    for df in pq._QUANT_CACHE.values():
-        df.unpersist()
-    pq._QUANT_CACHE.clear()
-    for df in semdedup._CACHED:
-        df.unpersist()
-    semdedup._CACHED.clear()
+    memos = (
+        dedup._SHINGLE_CACHE,
+        dedup._GUARD_CACHE,
+        similarity._EMB_GUARD_CACHE,
+        graph._EDGE_CACHE,
+        kmeans._FIT_CACHE,  # values: (frame, centroids)
+        kmeans._Q_CACHE,
+        kmeans._EMB_Q_CACHE,
+        pq._TRAIN_CACHE,  # values: (frame, codebooks)
+        pq._QUANT_CACHE,
+        semdedup._CACHED,
+    )
+    for memo in memos:
+        for v in memo.values() if isinstance(memo, dict) else memo:
+            df = v[0] if isinstance(v, tuple) else v
+            if df.sparkSession.sparkContext._jsc is not None:
+                df.unpersist()
+        memo.clear()
 
 
 def query(name: str, oracle: str | None = None, doc: str = ""):

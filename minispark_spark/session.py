@@ -23,6 +23,15 @@ from pyspark.sql import SparkSession
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 DEFAULT_SHUFFLE_PARTITIONS = CPUS
 
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` when SPARK_GRAFT_DRIVER_MEM is unset: a
+    quarter of the host's physical memory, so two local JVMs (a test
+    session and a subprocess sweep) fit side by side, capped at 16g."""
+    host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(16 * 1024, host_mb // 4)}m"
+
+
 # Opt-in conf profiles, each backed by a BASELINE.md measurement.
 #
 # "skew-tuned": AQE's skew split is gated on
@@ -64,7 +73,10 @@ def get_spark(
         )
         # local[N] runs driver + all executor threads in ONE JVM; the 1g
         # default heap causes GC stalls/OOM with 32 concurrent tasks.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

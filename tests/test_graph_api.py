@@ -79,6 +79,28 @@ def test_bfs_matches_registry(spark, sf_dir):
     assert got[BFS_SOURCE] == 0 and max(got.values()) >= 1
 
 
+def test_bfs_hand_graph(spark, graph):
+    hops = {r["id"]: r["hops"] for r in graph.bfs(0).collect()}
+    assert hops == {0: 0, 1: 1, 2: 1}
+    # Self loops change nothing.
+    edges = graph.edges.unionByName(spark.createDataFrame([(0, 0), (3, 3)], ["src", "dst"]))
+    looped = Graph(graph.vertices, edges)
+    assert {r["id"]: r["hops"] for r in looped.bfs(0).collect()} == hops
+    assert sorted(map(tuple, looped.bfs(3).collect())) == [(3, 0), (4, 1)]
+
+
+def test_bfs_from_isolated_vertex_reaches_only_itself(graph):
+    assert [tuple(r) for r in graph.bfs(5).collect()] == [(5, 0)]
+
+
+def test_bfs_from_unknown_id_reaches_only_itself(graph):
+    assert [tuple(r) for r in graph.bfs(99).collect()] == [(99, 0)]
+
+
+def test_bfs_zero_hops_returns_only_source(graph):
+    assert [tuple(r) for r in graph.bfs(0, max_hops=0).collect()] == [(0, 0)]
+
+
 def test_label_propagation_hand_graph(graph):
     # Triangle 0-1-2 converges to community 0; isolated vertex 5 keeps
     # its own label. The 3-4 pair OSCILLATES (synchronous LP's known

@@ -430,6 +430,52 @@ def test_label_propagation_round_broadcasts_labels(spark, sf_dir):
     assert "partial_max" in plan  # argmax combines map-side
 
 
+def _operators(df) -> list[str]:
+    """Operator names of ``df``'s physical plan (AQE's current plan,
+    query stages opened). A cached frame is one InMemoryTableScan leaf
+    here, whereas the plan TEXT reprints the plan that built the cache,
+    exchanges and all, and its nested "== Initial Plan ==" header cuts
+    :func:`_plan` short."""
+    names, stack = [], [df._jdf.queryExecution().executedPlan().executedPlan()]
+    while stack:
+        node = stack.pop()
+        names.append(node.nodeName())
+        if node.nodeName().endswith("QueryStage"):
+            stack.append(node.plan())
+        else:
+            kids = node.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+    return names
+
+
+def test_bfs_level_is_broadcast_and_shuffle_free(spark, sf_dir):
+    """A BFS level probes the cached dst-partitioned steps with the
+    BROADCAST reached set and min-folds per dst partition-locally: no
+    Exchange, so the next level's broadcast build is its only job. The
+    kernel returns a localCheckpoint scan that hides the per-level plan,
+    so pin the exposed level builder directly."""
+    from pyspark.sql import functions as F
+
+    from minispark_spark.operators.graph import BFS_SOURCE, _edges, bfs_level, bfs_steps
+
+    steps = bfs_steps(_edges(spark, sf_dir), BFS_SOURCE)
+    # The kernel's level 1 (a filter) materializes the cache before any
+    # broadcast level plans; the dst layout is known from then on.
+    steps.count()
+    reached = steps.select(F.col("dst").alias("node"), F.col("w").alias("h")).distinct()
+    ops = _operators(bfs_level(steps, reached))
+    assert "BroadcastHashJoin" in ops
+    assert "Exchange" not in ops  # BroadcastExchange is its own name
+
+
+def test_pq_recall_scans_corpus_once(spark, sf_dir):
+    """ann_pq_recall answers the exact and the ADC top-k from ONE Arrow
+    pass over the corpus, ranked by one window."""
+    ops = _operators(REGISTRY["ann_pq_recall"].fn(spark, sf_dir))
+    assert ops.count("MapInPandas") == 1
+    assert ops.count("Exchange") == 1
+
+
 def test_gopher_quality_is_shuffle_free(spark, sf_dir):
     """docs_gopher_quality is a pure row-local projection: all seven
     rule evaluations are array-lambda expressions over one scan — any

@@ -3,8 +3,8 @@
 Wall-clock bench comparisons proved load-sensitive (r6: uniform
 1.2-1.8x inflation from external tenants with bit-identical plans), so
 the regression signal the suite enforces is STRUCTURAL: every batch
-registry query's executed stage count, task count, shuffle bytes, and
-input bytes at sf0.001 must stay within the checked-in budgets
+registry query's job count, executed stage count, task count, shuffle
+bytes, and input bytes at sf0.001 must stay within the checked-in budgets
 (tests/structural_budgets.json, slack documented in
 tools/structural_check.py). A breach means the plan itself changed —
 that fails HERE, in pytest, not in a bench eyeball.

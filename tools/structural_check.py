@@ -5,9 +5,9 @@ tenants while the plans stay bit-identical (BASELINE.md r6 variance
 investigation), so round-over-round regression checking needs metrics
 the machine's load cannot touch. This tool executes every batch registry
 query at sf0.001 with the Spark event log on, folds the log into
-per-query structure (stage count, task count, shuffle bytes, input
-bytes — tracing.summarize_event_log), and compares against the
-checked-in budgets in ``tests/structural_budgets.json``:
+per-query structure (job count, stage count, task count, shuffle
+bytes, input bytes — tracing.summarize_event_log), and compares against
+the checked-in budgets in ``tests/structural_budgets.json``:
 
     python tools/structural_check.py            # check (exit 1 on breach)
     python tools/structural_check.py --update   # re-measure and rewrite
@@ -15,7 +15,7 @@ checked-in budgets in ``tests/structural_budgets.json``:
 A breach means the PLAN changed — a new exchange shuffling real data or
 a stage-count blow-up — and fails pytest via
 tests/test_structural_budget.py regardless of how fast the box happens
-to be. Slack: stages may grow by max(2, 50%) (AQE coalescing jitter),
+to be. Slack: jobs and stages may grow by max(2, 50%) (AQE jitter),
 shuffle/input bytes by 2x + 64 KiB (compression jitter) before the gate
 trips; real regressions (a corpus-sized shuffle appearing where none
 was) blow through both.
@@ -40,7 +40,7 @@ import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 BUDGETS = os.path.join(ROOT, "tests", "structural_budgets.json")
-METRICS = ("stages", "tasks", "shuffle_write_bytes", "input_bytes")
+METRICS = ("jobs", "stages", "tasks", "shuffle_write_bytes", "input_bytes")
 
 
 def measure(sf_dir: str) -> dict[str, dict[str, int]]:
@@ -75,6 +75,7 @@ def measure(sf_dir: str) -> dict[str, dict[str, int]]:
 
 def allowed(budget: dict[str, int]) -> dict[str, int]:
     return {
+        "jobs": budget["jobs"] + max(2, budget["jobs"] // 2),
         "stages": budget["stages"] + max(2, budget["stages"] // 2),
         "tasks": budget["tasks"] * 2 + 32,
         "shuffle_write_bytes": budget["shuffle_write_bytes"] * 2 + 65536,
